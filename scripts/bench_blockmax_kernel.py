@@ -1,8 +1,8 @@
 """Kernel-level block-max vs exact timing at 100x-scale group sizes.
 
-The end-to-end bench (bench_blockmax.py) shows only ~1.05-1.3x at the
-1M-turn index because per-job fixed overhead (~0.4 s) dwarfs the kernel
-time at that group size.  The verdict item is ASYMPTOTIC safety: the
+End to end, block-max measured only ~1.05-1.3x over the exact kernel at
+the 1M-turn index (BASELINE.md) because per-job fixed overhead (~0.4 s)
+dwarfs the kernel time at that group size.  The verdict item is ASYMPTOTIC safety: the
 exact kernel is O(total postings of the query terms) per group, so the
 relevant measurement is kernel time alone at the posting-list sizes a
 100x corpus would put in one group.  This script synthesizes realistic

@@ -7,7 +7,7 @@ Three ways to absorb a delta into a live index, same (warmed) session:
   segment  — build_index(delta) alone           O(delta text)   ← LSM ingest
 
 plus the price the segment option pays at query time: MultiIndex([base,
-delta]) runs every kernel with_ties=True (no WAND) and unions two
+delta]) runs every kernel with_ties=True (boundary ties emitted) and unions two
 bucket-pruned scans, so per-query latency is higher than the compacted
 single index until compaction (= extend) folds the segments together.
 Reported: the three ingest times and the per-query latency (median over

@@ -48,7 +48,7 @@ def main() -> None:
 
     sections.append(
         (
-            "Compressed-index BM25 top-k (WAND path)",
+            "Compressed-index BM25 top-k (block-max path)",
             "Expected: parquet scan of postings with PartitionFilters on "
             "`bucket` (term-hash pruning) and PushedFilters on `term`; ONE "
             "grouped FlatMapGroupsInPandas (the per-group kernel — doclens "

@@ -4,7 +4,7 @@ A from-scratch re-expression of the query/data semantics of the reference
 system ``mohamed-sameh-albaz/Search-Engine`` (Java/Spring/Postgres) on top of
 Apache Spark: vectorized Arrow/pandas-UDF text normalization, per-partition
 posting-list construction with delta+varbyte compression, doc-sharded
-block-max index layout, BM25 top-k with block-max WAND early termination,
+block-max index layout, BM25 top-k with block-max early termination,
 checkpoint-resumable builds with per-partition lineage and metrics.
 
 The correctness contract (tokenizer / stopword / Porter-stemmer semantics and

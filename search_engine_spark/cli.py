@@ -7,7 +7,7 @@ spark-submit --py-files"), also runnable as
   build   --input <transcripts parquet/dir> --output <index dir>
           [--groups 8] [--checkpoint] [--resume]
   query   --index <index dir> --query "<text>" [--mode disjunctive]
-          [--k 10] [--algo auto]
+          [--k 10]
   bench   (delegates to bench.py's workload at $SPARK_GRAFT_SF_DIR)
 
 The reference's equivalents are the REST endpoints /reindex and
@@ -318,8 +318,8 @@ def cmd_query(args: argparse.Namespace) -> None:
     if args.mode == "qs":
         # unified query string (operators/querystring.py): occurrence,
         # phrases, field filters, expansion markers, and boosts in ONE
-        # string — expansion/synonym rewrites and --algo do not apply
-        # (the grammar carries its own markers; candidates+exact path)
+        # string — expansion/synonym rewrites do not apply (the grammar
+        # carries its own markers; candidates+exact path)
         if getattr(args, "sort_field", None) or _recency_opts(args) or (
             getattr(args, "synonyms", False)
         ):
@@ -447,7 +447,7 @@ def cmd_query(args: argparse.Namespace) -> None:
             ).collect()
     else:
         rows = idx.topk(
-            query_text, args.mode, args.k, algo=args.algo,
+            query_text, args.mode, args.k,
             tombstones=_load_tombstones(args.tombstones), scope=scope,
             analyzed=analyzed, min_match=min_match or 1, search_after=search_after,
         ).collect()
@@ -566,7 +566,7 @@ def cmd_query_batch(args: argparse.Namespace) -> None:
         )
         for i, spec in zip(qs_rows, specs):
             queries[i] = (spec, raw[i].get("k", args.k))
-    rows = idx.topk_batch(queries, k=args.k, algo=args.algo).collect()
+    rows = idx.topk_batch(queries, k=args.k).collect()
     by_q: dict[int, list] = {}
     for r in rows:
         by_q.setdefault(r["query_id"], []).append(
@@ -1162,7 +1162,7 @@ def _one_index_stats(spark, root: str) -> dict:
     from .index.reader import CompressedIndex
 
     idx = CompressedIndex(spark, root)
-    agg = idx._postings.filter(F.col("bucket") >= 0).agg(
+    agg = idx._blocks.filter(F.col("bucket") >= 0).agg(
         F.countDistinct("term").alias("n_terms"),
         F.sum("n").alias("n_postings"),
         F.count("*").alias("n_blocks"),
@@ -1581,7 +1581,6 @@ def main(argv: list[str] | None = None) -> None:
         "expansion markers (* ? ~ /re/), ^boosts — one string, one plan",
     )
     q.add_argument("--k", type=int, default=10)
-    q.add_argument("--algo", default="auto", choices=["auto", "exact", "wand"])
     q.add_argument(
         "--tombstones",
         help="JSONL of {conv_id[, turn_idx]} rows to exclude (deleted docs)",
@@ -1664,7 +1663,6 @@ def main(argv: list[str] | None = None) -> None:
     )
     qb.add_argument("--queries", required=True, help="JSONL file, one query object per line")
     qb.add_argument("--k", type=int, default=10)
-    qb.add_argument("--algo", default="auto", choices=["auto", "exact", "wand"])
     qb.set_defaults(fn=cmd_query_batch)
 
     ml = sub.add_parser(

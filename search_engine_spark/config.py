@@ -15,7 +15,7 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 # --- physical layout tunables (scale knobs, not semantics) ---
-# Max postings per index block; bounds row size + drives block-max WAND
+# Max postings per index block; bounds row size + drives block-max pruning
 # granularity.  At 10^12 turns a head term still yields bounded rows.
 BLOCK_SIZE = 4096
 

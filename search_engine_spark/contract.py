@@ -2290,10 +2290,12 @@ def _transcripts_oracle_sql(query_text: str, mode: str, k: int = 10) -> str:
     _transcripts_oracle_sql("term0001 term0002", "disjunctive", 10),
 )
 def transcripts_bm25_wand(spark, sf_dir):
-    """Full engine: compressed index + block-max WAND over the transcript
-    corpus; the oracle is the pure-Python reference scorer's output."""
+    """Full engine: compressed index + the default disjunctive top-k
+    (vectorized block-max pruning) over the transcript corpus; the
+    oracle is the pure-Python reference scorer's output.  The entry
+    name is part of the query contract, so it stays."""
     idx = _xs_index(spark)
-    return idx.topk("term0001 term0002", "disjunctive", 10, algo="wand").select(
+    return idx.topk("term0001 term0002", "disjunctive", 10).select(
         "conv_id", "turn_idx", rnd(F.col("score"), 5).alias("score")
     )
 
@@ -3953,7 +3955,8 @@ def transcripts_weighted(spark, sf_dir):
     Σ (w·idf)·tf_bm25.  Implemented by pre-scaling the broadcast idf map
     — zero kernel changes, block-max bounds stay valid (they are built
     FROM the scaled map), so the default pruned path serves boosted
-    queries too (algo parity pinned by tests/test_query_options.py).
+    queries too (block-max == exact under boosts pinned by
+    tests/test_blockmax.py).
     No reference analog (its ranker has no query weights); semantics
     follow Lucene, verified against the pure-Python oracle."""
     idx = _xs_index(spark)

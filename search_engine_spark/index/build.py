@@ -27,7 +27,7 @@ Spark-first staged build over the transcripts table:
            ``mapInPandas`` kernel (one invocation per Arrow batch, NOT per
            term) concatenates fragments into sorted posting runs and packs
            them into blocks of ``block_size`` with block-max BM25 partial
-           upper bounds for WAND.  Written partitioned by
+           upper bounds for block-max pruning.  Written partitioned by
            ``bucket = pmod(xxhash64(term), NB)`` for query-time partition
            pruning (the Iceberg ``bucket(term)`` analog).
   phase 4  idf table (``idf = ln((1+N)/(1+df)) + 1``, IndexerService.java:966)

@@ -379,7 +379,7 @@ def compact_segments(
     rewritten into a single global ``conv_rank`` space, and re-merged
     through the same salted shuffle a fresh build uses.  Global ranks
     are lexicographic, so the output is always order-isomorphic: a
-    compaction RESTORES the exact-cut/WAND fast path even when an input
+    compaction RESTORES the exact-cut fast path even when an input
     segment had lost it.
 
     Segments must hold disjoint LIVE (conv_id, turn_idx) documents —

@@ -6,10 +6,10 @@ paths that must agree bit-for-bit:
 
 * ``exact``: decode all postings for the query terms, score every
   matching doc (vectorized), take the group-local top-k.  The internal
-  cross-check and the fast path for small candidate sets.
-* ``wand``: document-at-a-time Block-Max WAND (Broder et al. 2003;
-  Ding & Suel 2011 block-max refinement) using per-block
-  ``idf * max_partial`` upper bounds — skips docs/blocks that cannot
+  cross-check and the path for materialized candidate sets.
+* ``blockmax``: vectorized block-at-a-time top-k using per-block
+  ``idf * max_partial`` upper bounds (the Block-Max WAND stop rule,
+  Broder et al. 2003; Ding & Suel 2011) — skips blocks that cannot
   enter the top-k.  Replaces the reference's arbitrary LIMIT-1000
   candidate truncation (``QueryService.java:449`` — SURVEY.md T2/§4.2)
   with *provably lossless* early termination.
@@ -454,111 +454,6 @@ def blockmax_topk(
         cand_docs = merged[sidx]
         cand_scores = np.concatenate([cand_scores, scores])[sidx]
     return _cut_topk(cand_docs, cand_scores, k, with_ties)
-
-
-def wand_topk(
-    plists: dict[str, TermPostings],
-    idf: dict[str, float],
-    avgdl: float,
-    k: int,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Block-Max WAND disjunctive top-k over one group.
-
-    Lossless: ties at the threshold resolve to the earliest doc_id, and
-    docs are visited in ascending doc_id order, so skipping
-    ``upper_bound <= threshold`` docs once the heap is full never drops a
-    doc that deterministic tie-breaking would have kept.
-    """
-    import heapq
-
-    terms = [t for t in sorted(plists) if plists[t].doc_ids.size > 0]
-    if not terms:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-
-    docs = {t: plists[t].doc_ids for t in terms}
-    tfs = {t: plists[t].tfs for t in terms}
-    cur = {t: 0 for t in terms}  # cursor index into docs[t]
-    n = {t: docs[t].size for t in terms}
-    term_ub = {t: float(plists[t].block_ubs.max()) for t in terms}
-    bstarts = {t: plists[t].block_starts for t in terms}
-    bubs = {t: plists[t].block_ubs for t in terms}
-
-    # heap of (score, -doc_id): smallest = weakest entry (lowest score,
-    # then LARGEST doc_id — the one a tied earlier doc must NOT displace).
-    heap: list[tuple[float, int]] = []
-    theta = -1.0
-
-    def block_ub(t: str, i: int) -> float:
-        bi = np.searchsorted(bstarts[t], i, side="right") - 1
-        return float(bubs[t][bi])
-
-    alive = set(terms)
-    while alive:
-        order = sorted(alive, key=lambda t: (docs[t][cur[t]], t))
-        # find pivot: smallest prefix whose global-UB sum beats theta
-        acc = 0.0
-        pivot_idx = -1
-        for i, t in enumerate(order):
-            acc += term_ub[t]
-            if acc > theta:
-                pivot_idx = i
-                break
-        if pivot_idx < 0:
-            break  # even all terms together cannot beat theta
-        pivot_doc = int(docs[order[pivot_idx]][cur[order[pivot_idx]]])
-        first_doc = int(docs[order[0]][cur[order[0]]])
-        if first_doc == pivot_doc:
-            # block-max refinement over EVERY term aligned on pivot_doc —
-            # aligned terms beyond pivot_idx still contribute to this
-            # doc's score, so excluding them would under-bound it and
-            # wrongly skip true top-k docs (caught by the multi-block
-            # WAND==exact test)
-            bacc = 0.0
-            for t in order:
-                if int(docs[t][cur[t]]) != pivot_doc:
-                    break  # sorted: the aligned terms form a prefix
-                bacc += block_ub(t, cur[t])
-            if bacc > theta:
-                score = 0.0
-                # every aligned posting carries the SAME doc's length —
-                # take it from the first aligned term (inline v5 dls)
-                dl = float(plists[order[0]].dls[cur[order[0]]])
-                for t in sorted(alive):  # lexicographic summation order
-                    i = cur[t]
-                    if i < n[t] and int(docs[t][i]) == pivot_doc:
-                        tfv = np.asarray([tfs[t][i]], dtype=np.int64)
-                        score += idf[t] * float(
-                            _partial(tfv, np.asarray([dl]), avgdl)[0]
-                        )
-                if len(heap) < k:
-                    heapq.heappush(heap, (score, -pivot_doc))
-                    if len(heap) == k:
-                        theta = heap[0][0]
-                elif score > heap[0][0] or (
-                    score == heap[0][0] and pivot_doc < -heap[0][1]
-                ):
-                    heapq.heapreplace(heap, (score, -pivot_doc))
-                    theta = heap[0][0]
-            # advance every cursor sitting on pivot_doc
-            for t in list(alive):
-                if int(docs[t][cur[t]]) == pivot_doc:
-                    cur[t] += 1
-                    if cur[t] >= n[t]:
-                        alive.discard(t)
-        else:
-            # advance all pre-pivot cursors to >= pivot_doc
-            for t in order[:pivot_idx]:
-                j = int(np.searchsorted(docs[t], pivot_doc))
-                cur[t] = j
-                if j >= n[t]:
-                    alive.discard(t)
-
-    if not heap:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    out_docs = np.asarray([-d for _s, d in heap], dtype=np.int64)
-    out_scores = np.asarray([s for s, _d in heap], dtype=np.float64)
-    order = np.lexsort((out_docs, -out_scores))
-    return out_docs[order], out_scores[order]
 
 
 def msm_candidates(plists: dict[str, TermPostings], m: int) -> np.ndarray:

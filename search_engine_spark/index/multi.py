@@ -18,19 +18,19 @@ rebuilding the table):
     byte-for-byte (pinned by tests),
   * compact — ``extend_index`` folds accumulated deltas back into one
     root when the segment count grows; queries regain the single-index
-    fast path (WAND, exact-cut kernels).
+    exact-cut kernels (top-k cut at k, no boundary ties).
 
-Physical plan per query: each segment's bucket-pruned postings scan is
-unioned with a ``seg`` literal; ONE grouped kernel pass scores every
-(seg, group) partition against the broadcast global idf/avgdl (format
-v5 blocks carry per-posting doclens inline, so no segment-local state
-is needed); candidates map back to conversations through their own
-segment's convs table (doc ids are segment-local ranks); a global
-``ORDER BY score, conv_id, turn_idx LIMIT k`` merges segments.  The
-kernels always run ``with_ties=True`` here — doc-id order means nothing
-ACROSS segments, so boundary score-ties must surface for the global
-sort to resolve (WAND's bounded heap cannot hold ties, which is one
-more reason compaction exists).
+The query plans are the single-index ones (``reader.IndexReader``);
+this class supplies the segmented hooks.  Each segment's bucket-pruned
+postings scan is unioned with a ``seg`` literal; ONE grouped kernel pass
+scores every (seg, group) partition against the broadcast global
+idf/avgdl (format v5 blocks carry per-posting doclens inline, so no
+segment-local state is needed); candidates map back to conversations
+through their own segment's convs table (doc ids are segment-local
+ranks); a global ``ORDER BY score, conv_id, turn_idx LIMIT k`` merges
+segments.  The kernels always run ``with_ties=True`` here — doc-id
+order means nothing ACROSS segments, so boundary score-ties must
+surface for the global sort to resolve.
 """
 
 from __future__ import annotations
@@ -43,48 +43,23 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .codec import varbyte_decode
 from .reader import (
-    BATCH_RESULT_SCHEMA,
+    EXPLAIN_SCHEMA,
+    LABELED_SCHEMA,
     RESULT_SCHEMA,
     CompressedIndex,
+    IndexReader,
     Tombstones,
-    _batch_term_sets,
+    _assemble_explain,
     _fetch_terms,
-    _lru_topk,
-    _make_batch_kernel,
-    _make_group_kernel,
-    _parse_batch,
-    _rank_per_query,
+    _grouped_apply,
+    _make_collapse_kernel,
+    _tomb_key,
     _weighted_idf,
-    parse_query,
     resolve_tombstones,
 )
 
 
-def _with_seg(inner, n_cols_before: int = 0):
-    """Wrap a grouped kernel so its output carries the segment id from
-    the group key — the kernel itself is the tested single-index one."""
-
-    def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        out = inner(key[1:], pdf)
-        out.insert(0, "seg", np.full(len(out), key[0], dtype="int32"))
-        return out
-
-    return kernel
-
-
-def _with_seg_scoped(inner):
-    """Cogroup counterpart of :func:`_with_seg` for scoped kernels —
-    (key, postings, allow) with the (seg, group) composite key."""
-
-    def kernel(key: tuple, pdf: pd.DataFrame, allow_pdf: pd.DataFrame) -> pd.DataFrame:
-        out = inner(key[1:], pdf, allow_pdf)
-        out.insert(0, "seg", np.full(len(out), key[0], dtype="int32"))
-        return out
-
-    return kernel
-
-
-class MultiIndex:
+class MultiIndex(IndexReader):
     """Read-only view over several index segments, later segments win.
 
     Pass ``roots`` in chronological order (oldest first).  Effective
@@ -111,6 +86,8 @@ class MultiIndex:
     (groups are per-segment parallelism units, never joined across
     segments).
     """
+
+    tie_safe = True  # doc-id order means nothing across segments
 
     def __init__(self, spark: SparkSession, roots: list[str]):
         if not roots:
@@ -201,13 +178,6 @@ class MultiIndex:
     def warm(self) -> None:
         self._convs.count()
 
-    def topk_cached(
-        self, query_text: str, mode: str = "disjunctive", k: int = 10, algo: str = "auto"
-    ) -> list:
-        """Collected top-k through the shared LRU result cache — committed
-        segments are immutable, so entries never go stale."""
-        return _lru_topk(self, query_text, mode, k, algo)
-
     # -- global statistics -------------------------------------------
 
     def _resolve_tomb(self, tombstones) -> dict | None:
@@ -219,8 +189,6 @@ class MultiIndex:
         match_count)."""
         if not tombstones:
             return None
-        from .reader import _tomb_key
-
         key = _tomb_key(tombstones)
         hit = self._tomb_memo.get(key)
         if hit is None:
@@ -286,7 +254,7 @@ class MultiIndex:
             self._shadow_resolved = d
         return self._shadow_resolved or None
 
-    def _effective_exclude(self, tombstones) -> dict | None:
+    def _exclude(self, tombstones) -> dict | None:
         """User tombstones ∪ shadow supersession, per segment."""
         user = self._resolve_tomb(tombstones)
         sh = self._shadow_exclude()
@@ -394,31 +362,16 @@ class MultiIndex:
             ],
         )
 
-    def expand_prefixes(self, query_text: str, limit: int | None = None) -> str:
-        """Prefix (trailing-``*``) rewrite over the UNION vocabulary:
-        per-term df summed across segments orders the expansion (raw
-        sums — shadow-superseded copies may inflate a tie-break, which
-        only affects the cap boundary ordering, never scoring; scoring
-        idf stays exact via :meth:`idf_map`)."""
-        from .reader import PREFIX_CAP, rewrite_with_expansions, split_prefix_tokens
-
-        if limit is None:
-            limit = PREFIX_CAP
-        toks, prefixes = split_prefix_tokens(query_text)
-        if not prefixes:
-            return query_text
-        return rewrite_with_expansions(
-            toks, self._prefix_expansions(prefixes, limit)
-        )
-
     def _vocab_topdf(
         self, items: list[tuple[str, object]], limit: int
     ) -> dict[str, list[str]]:
         """Per-key top-df expansion over the UNION vocabulary: filtered
         union of segment idf tables → df summed per term → distributed
         TakeOrdered cap, so the driver receives at most ``limit`` rows
-        per key.  ``items`` = (key, filter-builder) where the builder
-        returns a boolean Column for one segment's idf frame."""
+        per key.  ``items`` = (key, boolean Column over one segment's idf
+        frame).  The sums are raw — shadow-superseded copies may inflate
+        a tie-break, which only affects the cap boundary ordering, never
+        scoring (scoring idf stays exact via :meth:`idf_map`)."""
         parts = []
         for key, cond in items:
             summed = (
@@ -446,66 +399,9 @@ class MultiIndex:
             for p, hits in by_key.items()
         }
 
-    def _prefix_expansions(
-        self, prefixes: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        return self._vocab_topdf(
-            [(p, F.col("term").startswith(p)) for p in prefixes], limit
-        )
-
-    def _wildcard_expansions(
-        self, patterns: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        """General-wildcard expansion over the union vocabulary (same
-        LIKE + literal-prefix pushdown as the single-index reader; df
-        summed across segments orders the cap)."""
-        from ..oracle import wildcard_literal_prefix, wildcard_to_like
-
-        items = []
-        for p in patterns:
-            cond = F.col("term").like(wildcard_to_like(p))
-            lit = wildcard_literal_prefix(p)
-            if lit:
-                cond = F.col("term").startswith(lit) & cond
-            items.append((p, cond))
-        return self._vocab_topdf(items, limit)
-
-    def _regexp_expansions(
-        self, patterns: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        import re as _re
-
-        for p in patterns:
-            try:
-                _re.compile(p)
-            except _re.error as e:
-                raise ValueError(f"invalid regexp term /{p}/: {e}") from e
-        return self._vocab_topdf(
-            [(p, F.col("term").rlike(f"^(?:{p})$")) for p in patterns], limit
-        )
-
-    def expand_fuzzy(self, query_text: str, limit: int | None = None) -> str:
-        """Fuzzy (trailing-``~``) rewrite over the UNION vocabulary:
-        per-segment delete-1 collision candidates merged with df summed
-        (raw sums, like :meth:`expand_prefixes`), then the shared
-        verify+rank contract."""
-        from ..oracle import (
-            FUZZY_CAP,
-            rank_fuzzy_candidates,
-            rewrite_fuzzy,
-            split_fuzzy_tokens,
-        )
-
-        if limit is None:
-            limit = FUZZY_CAP
-        toks, terms = split_fuzzy_tokens(query_text)
-        if not terms:
-            return query_text
-        return rewrite_fuzzy(toks, self._fuzzy_expansions(terms, limit))
-
     def _fuzzy_rows(self, terms: list[str]) -> dict[str, list[tuple[str, int]]]:
         """Per-segment delete-1 collision candidates merged with df
-        summed (raw sums, like :meth:`expand_prefixes`) — the MultiIndex
+        summed (raw sums, like :meth:`_vocab_topdf`) — the MultiIndex
         face of ``CompressedIndex._fuzzy_rows``, so fuzzy expansion and
         did-you-mean (operators/didyoumean.py) share ONE merge contract."""
         merged: dict[str, dict[str, int]] = {t: {} for t in terms}
@@ -515,76 +411,6 @@ class MultiIndex:
                 for w, dfv in lst:
                     acc[w] = acc.get(w, 0) + dfv
         return {t: list(d.items()) for t, d in merged.items()}
-
-    def _fuzzy_expansions(
-        self, terms: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        from ..oracle import rank_fuzzy_candidates
-
-        cand = self._fuzzy_rows(terms)
-        expansions: dict[str, list[str]] = {}
-        for t in terms:
-            exp = rank_fuzzy_candidates(t, cand.get(t, []), limit)
-            if exp:
-                expansions[t] = exp
-        return expansions
-
-    def _resolve_spec(self, spec):
-        """Resolve a phrase-prefix marker (ES ``match_phrase_prefix``)
-        over the UNION vocabulary — dfs summed across segments order the
-        cap, like :meth:`expand_prefixes`; the resolved variants then
-        run in every segment's kernel, so a variant present only in a
-        newer segment still matches."""
-        if spec is None or spec.phrase_prefix is None:
-            return spec
-        import dataclasses
-
-        from .reader import PREFIX_CAP
-
-        exp = self._prefix_expansions([spec.phrase_prefix], PREFIX_CAP).get(
-            spec.phrase_prefix, []
-        )
-        return dataclasses.replace(
-            spec,
-            phrase_prefix=None,
-            variants=exp,
-            score_terms=sorted(set((spec.phrase_a or []) + exp)),
-        )
-
-    def expand_query(
-        self,
-        query_text: str,
-        prefix_limit: int | None = None,
-        fuzzy_limit: int | None = None,
-    ) -> str | None:
-        """One-pass executable rewrite over the union vocabulary — same
-        contract as :meth:`CompressedIndex.expand_query` (fully analyzed
-        output, execute with ``analyzed=True``)."""
-        from ..oracle import (
-            FUZZY_CAP,
-            PREFIX_CAP,
-            assemble_expanded,
-            classify_expansion_tokens,
-        )
-
-        cls = classify_expansion_tokens(query_text)
-        prefixes = sorted({v for kk, v in cls if kk == "prefix"})
-        fuzzies = sorted({v for kk, v in cls if kk == "fuzzy"})
-        wilds = sorted({v for kk, v in cls if kk == "wildcard"})
-        rexps = sorted({v for kk, v in cls if kk == "regexp"})
-        if not prefixes and not fuzzies and not wilds and not rexps:
-            return None
-        return assemble_expanded(
-            cls,
-            self._prefix_expansions(prefixes, prefix_limit or PREFIX_CAP)
-            if prefixes else {},
-            self._fuzzy_expansions(fuzzies, fuzzy_limit or FUZZY_CAP)
-            if fuzzies else {},
-            self._wildcard_expansions(wilds, prefix_limit or PREFIX_CAP)
-            if wilds else {},
-            self._regexp_expansions(rexps, prefix_limit or PREFIX_CAP)
-            if rexps else {},
-        )
 
     def expand_synonyms(
         self, query_text: str, mapping: dict | None = None,
@@ -628,65 +454,18 @@ class MultiIndex:
             ],
         )
 
-    def topk(
-        self,
-        query_text: str,
-        mode: str = "disjunctive",
-        k: int = 10,
-        algo: str = "auto",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        min_match: int = 1,
-        search_after: tuple | None = None,
-        spec: "QuerySpec | None" = None,
-    ) -> DataFrame:
-        """Top-k across all segments → DataFrame(conv_id, turn_idx,
-        score); identical to a single index built over the union.
-        ``scope`` restricts results to the given turns (metadata filter,
-        global-stats scoring); ``min_match``/boosts (``tok^2``)/
-        ``search_after`` follow the single reader's contract (the
-        cursor resolves per segment — see :meth:`_resolve_after`)."""
-        if (tombstones or scope is not None or search_after is not None
-                or min_match > 1) and algo == "wand":
-            raise ValueError(
-                "algo='wand' cannot honor tombstones/scope/min_match/"
-                "search_after (its bounded heap has no candidate-exclusion "
-                "hook); use algo='auto' or 'exact'"
-            )
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
-        if spec is None:
-            return empty
-        fetch_terms = _fetch_terms(spec)
-        idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
-        kernel = _make_group_kernel(
-            spec, idf, self.avgdl, k, algo, with_ties=True,
-            exclude=self._effective_exclude(tombstones), turn_bits=self.turn_bits,
-            scoped=scope is not None,
-            after=self._resolve_after(search_after),
-        )
-        post = self._postings(fetch_terms)
-        if scope is not None:
-            cand = (
-                post.groupBy("seg", "group")
-                .cogroup(self.scope_docs(scope).groupBy("seg", "group"))
-                .applyInPandas(
-                    _with_seg_scoped(kernel), schema="seg int, " + RESULT_SCHEMA
-                )
-            )
-        else:
-            cand = post.groupBy("seg", "group").applyInPandas(
-                _with_seg(kernel), schema="seg int, " + RESULT_SCHEMA
-            )
-        return (
-            self._label(cand)
-            .orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
-            .limit(k)
-        )
+    def _grouped(self, post: DataFrame, scope: DataFrame | None, fn, schema: str) -> DataFrame:
+        """One kernel pass per (seg, group) partition — groups are
+        per-segment, never joined across segments; the output gains the
+        segment id from the group key, which the label join needs."""
+
+        def kernel(key: tuple, pdf: pd.DataFrame, allow) -> pd.DataFrame:
+            out = fn(pdf, allow)
+            out.insert(0, "seg", np.full(len(out), key[0], dtype="int32"))
+            return out
+
+        allow = None if scope is None else self.scope_docs(scope)
+        return _grouped_apply(post, allow, ("seg", "group"), kernel, "seg int, " + schema)
 
     def topk_conversations(
         self,
@@ -716,8 +495,6 @@ class MultiIndex:
         Collapsed deep pagination needs a compacted (single) index."""
         from pyspark.sql import Window
 
-        from .reader import _make_collapse_kernel
-
         if search_after is not None:
             raise ValueError(
                 "search_after on conversation-collapsed results needs a "
@@ -726,32 +503,15 @@ class MultiIndex:
                 "compact first or paginate turn-level topk"
             )
         if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
+            spec = self._parse(query_text, mode, analyzed, min_match)
         if spec is None:
-            return empty
-        fetch_terms = _fetch_terms(spec)
+            return self.spark.createDataFrame([], LABELED_SCHEMA)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
-        kernel = _make_collapse_kernel(
-            spec, idf, self.avgdl, k, with_ties=True,
-            exclude=self._effective_exclude(tombstones), turn_bits=self.turn_bits,
-            scoped=scope is not None,
+        fn = _make_collapse_kernel(
+            spec, idf, self.avgdl, k, with_ties=self.tie_safe,
+            exclude=self._exclude(tombstones), turn_bits=self.turn_bits,
         )
-        post = self._postings(fetch_terms)
-        if scope is not None:
-            cand = (
-                post.groupBy("seg", "group")
-                .cogroup(self.scope_docs(scope).groupBy("seg", "group"))
-                .applyInPandas(
-                    _with_seg_scoped(kernel), schema="seg int, " + RESULT_SCHEMA
-                )
-            )
-        else:
-            cand = post.groupBy("seg", "group").applyInPandas(
-                _with_seg(kernel), schema="seg int, " + RESULT_SCHEMA
-            )
+        cand = self._grouped(self._postings(_fetch_terms(spec)), scope, fn, RESULT_SCHEMA)
         w = Window.partitionBy("conv_id").orderBy(
             F.desc("score"), F.asc("turn_idx")
         )
@@ -763,130 +523,6 @@ class MultiIndex:
             .orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
             .limit(k)
         )
-
-    def match_count(
-        self,
-        query_text: str,
-        mode: str = "disjunctive",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        min_match: int = 1,
-        spec: "QuerySpec | None" = None,
-    ) -> int:
-        """Total matching documents across all segments (totalResults
-        analog) — per-(seg, group) counts sum because segments and
-        groups hold disjoint documents."""
-        from .reader import _make_count_kernel
-
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        if spec is None:
-            return 0
-        fetch_terms = _fetch_terms(spec)
-        idf = self.idf_map(spec.score_terms)
-        kernel = _make_count_kernel(
-            spec, idf, self.avgdl, exclude=self._effective_exclude(tombstones),
-            turn_bits=self.turn_bits, scoped=scope is not None,
-        )
-        post = self._postings(fetch_terms)
-        if scope is not None:
-            counted = (
-                post.groupBy("seg", "group")
-                .cogroup(self.scope_docs(scope).groupBy("seg", "group"))
-                .applyInPandas(_with_seg_scoped(kernel), schema="seg int, n long")
-            )
-        else:
-            counted = post.groupBy("seg", "group").applyInPandas(
-                _with_seg(kernel), schema="seg int, n long"
-            )
-        row = counted.agg(F.sum("n")).collect()[0]
-        return int(row[0] or 0)
-
-    def matches(
-        self,
-        query_text: str,
-        mode: str = "disjunctive",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        min_match: int = 1,
-        spec: "QuerySpec | None" = None,
-    ) -> DataFrame:
-        """ALL matching documents across segments → DataFrame(conv_id,
-        turn_idx) — the candidate set :meth:`match_count` sizes,
-        materialized for faceting and metadata joins."""
-        from .reader import MATCHES_SCHEMA, _make_matches_kernel
-
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame([], "conv_id string, turn_idx int")
-        if spec is None:
-            return empty
-        fetch_terms = _fetch_terms(spec)
-        idf = self.idf_map(spec.score_terms)
-        kernel = _make_matches_kernel(
-            spec, idf, self.avgdl, exclude=self._effective_exclude(tombstones),
-            turn_bits=self.turn_bits, scoped=scope is not None,
-        )
-        post = self._postings(fetch_terms)
-        if scope is not None:
-            cand = (
-                post.groupBy("seg", "group")
-                .cogroup(self.scope_docs(scope).groupBy("seg", "group"))
-                .applyInPandas(
-                    _with_seg_scoped(kernel), schema="seg int, " + MATCHES_SCHEMA
-                )
-            )
-        else:
-            cand = post.groupBy("seg", "group").applyInPandas(
-                _with_seg(kernel), schema="seg int, " + MATCHES_SCHEMA
-            )
-        return self._label(cand.withColumn("score", F.lit(0.0))).drop("score")
-
-    def matches_scored(
-        self,
-        query_text: str,
-        mode: str = "disjunctive",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        spec: "QuerySpec | None" = None,
-    ) -> DataFrame:
-        """ALL matching documents WITH exact BM25 scores across segments
-        → DataFrame(conv_id, turn_idx, score) — the segmented analog of
-        :meth:`CompressedIndex.matches_scored` (global stats via the
-        broadcast merged idf/avgdl, shadow/tombstone exclusion at kernel
-        time), feeding rescoring operators like recency decay."""
-        from .reader import RESULT_SCHEMA, _make_scored_matches_kernel
-
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
-        if spec is None:
-            return empty
-        fetch_terms = _fetch_terms(spec)
-        idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
-        kernel = _make_scored_matches_kernel(
-            spec, idf, self.avgdl, exclude=self._effective_exclude(tombstones),
-            turn_bits=self.turn_bits, scoped=scope is not None,
-        )
-        post = self._postings(fetch_terms)
-        if scope is not None:
-            cand = (
-                post.groupBy("seg", "group")
-                .cogroup(self.scope_docs(scope).groupBy("seg", "group"))
-                .applyInPandas(
-                    _with_seg_scoped(kernel), schema="seg int, " + RESULT_SCHEMA
-                )
-            )
-        else:
-            cand = post.groupBy("seg", "group").applyInPandas(
-                _with_seg(kernel), schema="seg int, " + RESULT_SCHEMA
-            )
-        return self._label(cand)
 
     def explain(
         self,
@@ -911,15 +547,13 @@ class MultiIndex:
         segments each pay one convs lookup, but only the owner runs the
         group-pruned postings kernel.  Shadowed or tombstoned
         occurrences explain as absent — the ES ``matched: false``."""
-        from .reader import EXPLAIN_SCHEMA, _assemble_explain
-
         if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
+            spec = self._parse(query_text, mode, analyzed, min_match)
         empty = self.spark.createDataFrame([], EXPLAIN_SCHEMA)
         if spec is None:
             return empty
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
-        excl = self._effective_exclude(tombstones)
+        excl = self._exclude(tombstones)
         for i in reversed(range(len(self.segments))):
             seg = self.segments[i]
             coords = seg._doc_coords(conv_id, turn_idx)
@@ -938,89 +572,3 @@ class MultiIndex:
                     self.df_map(spec.score_terms), spec, self.avgdl,
                 )
         return empty
-
-    def facet_counts(
-        self,
-        query_text: str,
-        meta: DataFrame,
-        facet_col: str,
-        mode: str = "disjunctive",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        min_match: int = 1,
-        spec: "QuerySpec | None" = None,
-    ) -> DataFrame:
-        """Matching-doc counts grouped by a metadata column → DataFrame
-        (facet_col, n), across all segments — same contract as
-        :meth:`CompressedIndex.facet_counts`."""
-        from .reader import _facet_join
-
-        cand = self.matches(
-            query_text, mode, tombstones=tombstones, scope=scope,
-            analyzed=analyzed, min_match=min_match, spec=spec,
-        )
-        return _facet_join(cand, meta, facet_col)
-
-    def topk_batch(
-        self,
-        queries: list[tuple[str, str] | tuple[str, str, int]],
-        k: int = 10,
-        algo: str = "auto",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-    ) -> DataFrame:
-        """Batched top-k across all segments in ONE job →
-        DataFrame(query_id, conv_id, turn_idx, score); row-identical to
-        per-query :meth:`topk` (pinned by tests).  ``scope`` applies one
-        shared metadata filter to every query of the batch."""
-        if (tombstones or scope is not None) and algo == "wand":
-            raise ValueError(
-                "algo='wand' cannot honor tombstones/scope (its bounded heap "
-                "has no candidate-exclusion hook); use algo='auto' or 'exact'"
-            )
-        specs = [
-            (i, self._resolve_spec(sp), kk)
-            for i, sp, kk in _parse_batch(queries, k, analyzed=analyzed)
-        ]
-        empty = self.spark.createDataFrame(
-            [], "query_id int, conv_id string, turn_idx int, score double"
-        )
-        if not specs:
-            return empty
-        fetch_terms, score_terms = _batch_term_sets(specs)
-        merged_idf = self.idf_map(sorted(score_terms))
-        # per-query maps carry that query's boosts (plists stay built
-        # from the unscaled merged map — weighted specs score exact)
-        idfs = [
-            _weighted_idf({t: merged_idf[t] for t in s.score_terms}, s)
-            for _, s, _ in specs
-        ]
-        kernel = _make_batch_kernel(
-            [s for _, s, _ in specs],
-            idfs,
-            merged_idf,
-            self.avgdl,
-            [kk for _, _, kk in specs],
-            algo,
-            with_ties=True,
-            exclude=self._effective_exclude(tombstones),
-            turn_bits=self.turn_bits,
-            scoped=scope is not None,
-        )
-        post = self._postings(sorted(fetch_terms))
-        if scope is not None:
-            cand = (
-                post.groupBy("seg", "group")
-                .cogroup(self.scope_docs(scope).groupBy("seg", "group"))
-                .applyInPandas(
-                    _with_seg_scoped(kernel),
-                    schema="seg int, " + BATCH_RESULT_SCHEMA,
-                )
-            )
-        else:
-            cand = post.groupBy("seg", "group").applyInPandas(
-                _with_seg(kernel), schema="seg int, " + BATCH_RESULT_SCHEMA
-            )
-        return _rank_per_query(self._label(cand, extra=("query_id",)), specs)

@@ -4,7 +4,7 @@ Physical plan per query::
 
     idf parquet  --bucket-pruned scan--> driver (|terms| rows, broadcast)
     postings parquet --bucket-pruned, term-filtered scan-->
-        groupBy(group).applyInPandas(per-group WAND / exact kernel)
+        groupBy(group).applyInPandas(per-group block-max / exact kernel)
         # ≤ G·k rows out; doclens ride INLINE in the blocks (format v5),
         # so the only exchange carries the pruned postings — never the
         # corpus-wide doclen blobs the pre-v5 cogroup shipped per query
@@ -59,7 +59,6 @@ from .kernels import (
     msm_candidates,
     near_candidates,
     phrase_candidates,
-    wand_topk,
 )
 from .xxhash import term_bucket
 
@@ -248,25 +247,16 @@ def _tomb_key(items: list) -> tuple:
     )
 
 
-def _tomb_for(exclude, post_pdf: pd.DataFrame):
-    """Kernel-side tombstone lookup: a plain set for one index, or a
-    per-segment dict keyed by the batch's ``seg`` column (MultiIndex)."""
-    if not isinstance(exclude, dict):
-        return exclude
+def _per_seg(value, post_pdf: pd.DataFrame):
+    """Kernel-side lookup of a resolved exclusion set or search_after
+    cursor: the value itself for one index, or — MultiIndex, whose doc
+    ids are segment-local — the batch's own segment entry of a per-
+    segment dict, keyed by the ``seg`` column."""
+    if not isinstance(value, dict):
+        return value
     if "seg" not in post_pdf.columns or len(post_pdf) == 0:
         return None
-    return exclude.get(int(post_pdf["seg"].iloc[0]))
-
-
-def _after_for(after, post_pdf: pd.DataFrame):
-    """Kernel-side search_after cursor: a (score, cursor_doc_id) pair for
-    one index, or a per-segment dict (MultiIndex — each segment has its
-    own conv_rank space, so the cursor doc id differs per segment)."""
-    if not isinstance(after, dict):
-        return after
-    if "seg" not in post_pdf.columns or len(post_pdf) == 0:
-        return None
-    return after.get(int(post_pdf["seg"].iloc[0]))
+    return value.get(int(post_pdf["seg"].iloc[0]))
 
 
 def _weighted_idf(idf: dict[str, float], spec: QuerySpec) -> dict[str, float]:
@@ -407,7 +397,6 @@ def _make_collapse_kernel(
     with_ties: bool = False,
     exclude=None,
     turn_bits: int = TURN_BITS,
-    scoped: bool = False,
     after=None,
 ):
     """Per-group kernel for conversation-collapsed top-k (the field-
@@ -427,12 +416,10 @@ def _make_collapse_kernel(
             return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
                                  "score": pd.array([], dtype="float64")})
         plists = _build_plists(post_pdf, idf, avgdl)
-        docs, scores = _score_spec(
-            spec, idf, plists, avgdl, 1 << 62, "exact", False,
-            tomb=_tomb_for(exclude, post_pdf), turn_bits=turn_bits,
-            allow=allow,
+        docs, scores = _scored_candidates(
+            spec, idf, plists, avgdl, _per_seg(exclude, post_pdf), turn_bits, allow
         )
-        aft = _after_for(after, post_pdf)
+        aft = _per_seg(after, post_pdf)
         if aft is None:
             docs, scores = _collapse_convs(docs, scores, k, turn_bits, with_ties)
         else:
@@ -444,14 +431,7 @@ def _make_collapse_kernel(
             docs, scores = _cut_topk(docs[keep], scores[keep], k, with_ties)
         return pd.DataFrame({"doc_id": docs, "score": scores})
 
-    if scoped:
-        def kernel(key: tuple, post_pdf: pd.DataFrame, allow_pdf: pd.DataFrame):
-            return collapse(post_pdf, _allow_arr(allow_pdf))
-    else:
-        def kernel(key: tuple, post_pdf: pd.DataFrame) -> pd.DataFrame:
-            return collapse(post_pdf, None)
-
-    return kernel
+    return collapse
 
 
 def _rank_per_query(labeled: DataFrame, specs: list[tuple[int, QuerySpec, int]]) -> DataFrame:
@@ -484,23 +464,434 @@ def _rank_per_query(labeled: DataFrame, specs: list[tuple[int, QuerySpec, int]])
     )
 
 
-def _lru_topk(index, query_text: str, mode: str, k: int, algo: str) -> list:
-    """Collected top-k through the index's 500-entry LRU result cache
-    (SearchController.java:33-36 analog, minus the TTL — indexes and
-    committed segments are immutable)."""
-    key = (query_text, mode, k, algo)
-    hit = index._results.get(key)
-    if hit is not None:
-        index._results.move_to_end(key)
-        return hit
-    rows = index.topk(query_text, mode, k, algo).collect()
-    index._results[key] = rows
-    if len(index._results) > RESULT_CACHE_SIZE:
-        index._results.popitem(last=False)
-    return rows
+LABELED_SCHEMA = "conv_id string, turn_idx int, score double"
 
 
-class CompressedIndex:
+def _grouped_apply(post: DataFrame, allow: DataFrame | None, keys: tuple, fn, schema: str) -> DataFrame:
+    """``groupBy(keys).applyInPandas`` over the pruned postings, or — when
+    a scope's allow side is given — the cogroup of both on the SAME keys
+    (the allow side shuffles once, partitioned like the postings, never
+    via the driver).  ``fn(key, post_pdf, allow)`` gets ``allow`` as a
+    sorted doc-id array, or None without a scope."""
+    if allow is None:
+        def kernel(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+            return fn(key, pdf, None)
+
+        return post.groupBy(*keys).applyInPandas(kernel, schema=schema)
+
+    def kernel(key: tuple, pdf: pd.DataFrame, allow_pdf: pd.DataFrame) -> pd.DataFrame:
+        return fn(key, pdf, _allow_arr(allow_pdf))
+
+    return (
+        post.groupBy(*keys)
+        .cogroup(allow.groupBy(*keys))
+        .applyInPandas(kernel, schema=schema)
+    )
+
+
+class IndexReader:
+    """The query plans, written once for :class:`CompressedIndex` and
+    :class:`~.multi.MultiIndex`.  Each plan is: parse → resolve the
+    spec → broadcast idf → ONE grouped kernel pass over the
+    bucket-pruned postings → label doc ids → global cut.  The readers
+    differ only in these hooks:
+
+    * ``_postings(terms)`` — the bucket-pruned posting blocks of ``terms``;
+    * ``_grouped(post, scope, fn, schema)`` — run ``fn(post_pdf, allow)``
+      once per group (cogrouped with the scope's doc ids when given);
+    * ``_exclude(tombstones)`` — the resolved exclusion set kernels see;
+    * ``tie_safe`` — kernels must emit boundary score ties, because doc-id
+      order is not the final (conv_id, turn_idx) tie-break order;
+    * ``_label``, ``scope_docs``, ``idf_map``/``df_map``,
+      ``_resolve_after``, ``_vocab_topdf`` and ``_fuzzy_rows``.
+    """
+
+    turn_bits: int = TURN_BITS  # dense-scheme indexes never decode rank bits
+
+    def topk_cached(
+        self, query_text: str, mode: str = "disjunctive", k: int = 10
+    ) -> list:
+        """Collected top-k through a 500-entry LRU result cache
+        (SearchController.java:33-36 analog, minus the TTL — indexes and
+        committed segments are immutable)."""
+        key = (query_text, mode, k)
+        hit = self._results.get(key)
+        if hit is not None:
+            self._results.move_to_end(key)
+            return hit
+        rows = self.topk(query_text, mode, k).collect()
+        self._results[key] = rows
+        if len(self._results) > RESULT_CACHE_SIZE:
+            self._results.popitem(last=False)
+        return rows
+
+    # -- vocabulary expansion ----------------------------------------
+
+    def expand_prefixes(self, query_text: str, limit: int = PREFIX_CAP) -> str:
+        """Rewrite trailing-``*`` tokens into their matching index terms
+        (``kuber* pod`` → ``kubernetes kuberctl pod``) — the Lucene
+        multi-term-query contract: the wildcard matches the POST-STEM
+        index vocabulary (wildcard terms skip analysis), expansion is
+        capped at ``limit`` terms per prefix (highest df first, term asc
+        ties — the most selective rewrite), and unmatched prefixes drop
+        out.  The rewritten string feeds the ordinary query paths, so
+        expansion composes with scope/tombstones/batch for free.
+
+        Physically one scan of the one-row-per-term idf table with the
+        ``StartsWith`` filters pushed to parquet (the term-hash bucket
+        layout cannot prune a prefix — the vocabulary table is the
+        right side to pay that scan on, postings stay bucket-pruned)."""
+        toks, prefixes = split_prefix_tokens(query_text)
+        if not prefixes:
+            return query_text
+        return rewrite_with_expansions(
+            toks, self._prefix_expansions(prefixes, limit)
+        )
+
+    def _prefix_expansions(
+        self, prefixes: list[str], limit: int
+    ) -> dict[str, list[str]]:
+        return self._vocab_topdf(
+            [(p, F.col("term").startswith(p)) for p in prefixes], limit
+        )
+
+    def _wildcard_expansions(
+        self, patterns: list[str], limit: int
+    ) -> dict[str, list[str]]:
+        """General wildcard (``*``/``?`` anywhere) expansion over the
+        post-stem vocabulary — Lucene WildcardQuery semantics.  The
+        longest literal prefix is pushed as an extra StartsWith (prunes
+        the scan unless the pattern leads with a wildcard, Lucene's own
+        cost cliff); the LIKE itself evaluates in codegen."""
+        items = []
+        for p in patterns:
+            cond = F.col("term").like(wildcard_to_like(p))
+            lit = wildcard_literal_prefix(p)
+            if lit:
+                cond = F.col("term").startswith(lit) & cond
+            items.append((p, cond))
+        return self._vocab_topdf(items, limit)
+
+    def _regexp_expansions(
+        self, patterns: list[str], limit: int
+    ) -> dict[str, list[str]]:
+        """Regexp term (``/pattern/``) expansion — Lucene RegexpQuery
+        semantics: the pattern must match the WHOLE vocabulary term
+        (anchored).  Evaluated JVM-side via ``rlike``; patterns are
+        validated driver-side first so an invalid regex fails loud with
+        a Python error, not an opaque executor stack."""
+        import re as _re
+
+        for p in patterns:
+            try:
+                _re.compile(p)
+            except _re.error as e:
+                raise ValueError(f"invalid regexp term /{p}/: {e}") from e
+        return self._vocab_topdf(
+            [(p, F.col("term").rlike(f"^(?:{p})$")) for p in patterns], limit
+        )
+
+    def expand_fuzzy(self, query_text: str, limit: int = FUZZY_CAP) -> str:
+        """Rewrite trailing-``~`` tokens into their edit-distance-≤1
+        vocabulary neighbors (``kubernets~`` → ``kubernetes ...``) —
+        Lucene fuzzy-query semantics with the SymSpell delete-1 scheme
+        for candidate generation (see ``index/fuzzy.py``): exact term
+        first, then df desc / term asc, capped at ``limit``; unmatched
+        terms drop out.  The rewrite feeds the ordinary analyzed paths,
+        composing with scope/tombstones/batch like prefix expansion."""
+        toks, terms = split_fuzzy_tokens(query_text)
+        if not terms:
+            return query_text
+        return rewrite_fuzzy(toks, self._fuzzy_expansions(terms, limit))
+
+    def _fuzzy_expansions(
+        self, terms: list[str], limit: int
+    ) -> dict[str, list[str]]:
+        cand = self._fuzzy_rows(terms)
+        expansions: dict[str, list[str]] = {}
+        for t in terms:
+            exp = rank_fuzzy_candidates(t, cand.get(t, []), limit)
+            if exp:
+                expansions[t] = exp
+        return expansions
+
+    def expand_query(
+        self,
+        query_text: str,
+        prefix_limit: int = PREFIX_CAP,
+        fuzzy_limit: int = FUZZY_CAP,
+    ) -> str | None:
+        """One-pass EXECUTABLE rewrite of a query containing ``*``/``?``
+        /``~``/``/…/`` markers, or None when it has none: marker tokens
+        splice in their vocabulary expansions (prefix, fuzzy, general
+        wildcard, regexp), plain tokens run through the analyzer
+        ONCE, and the result must execute with ``analyzed=True`` —
+        vocabulary terms are analysis fixed points only by accident
+        (Porter is not idempotent: ``university → univers → univ``), so
+        a second analysis pass would corrupt them."""
+        cls = classify_expansion_tokens(query_text)
+        prefixes = sorted({v for kk, v in cls if kk == "prefix"})
+        fuzzies = sorted({v for kk, v in cls if kk == "fuzzy"})
+        wilds = sorted({v for kk, v in cls if kk == "wildcard"})
+        rexps = sorted({v for kk, v in cls if kk == "regexp"})
+        if not prefixes and not fuzzies and not wilds and not rexps:
+            return None
+        return assemble_expanded(
+            cls,
+            self._prefix_expansions(prefixes, prefix_limit) if prefixes else {},
+            self._fuzzy_expansions(fuzzies, fuzzy_limit) if fuzzies else {},
+            self._wildcard_expansions(wilds, prefix_limit) if wilds else {},
+            self._regexp_expansions(rexps, prefix_limit) if rexps else {},
+        )
+
+    def _resolve_spec(self, spec: "QuerySpec | None") -> "QuerySpec | None":
+        """Resolve a phrase-prefix marker (ES ``match_phrase_prefix``:
+        ``"incid resp*"``) into its vocabulary variants — one idf-table
+        TakeOrdered like :meth:`expand_prefixes` — folding them into the
+        scoring set.  Kernels require the resolved form (they have no
+        vocabulary access); the variants run in every group's kernel, so
+        on a MultiIndex a variant present only in a newer segment still
+        matches."""
+        if spec is None or spec.phrase_prefix is None:
+            return spec
+        import dataclasses
+
+        exp = self._prefix_expansions([spec.phrase_prefix], PREFIX_CAP).get(
+            spec.phrase_prefix, []
+        )
+        return dataclasses.replace(
+            spec,
+            phrase_prefix=None,
+            variants=exp,
+            score_terms=sorted(set((spec.phrase_a or []) + exp)),
+        )
+
+    # -- query -------------------------------------------------------
+
+    def _parse(
+        self, query_text: str, mode: str, analyzed: bool, min_match: int = 1
+    ) -> "QuerySpec | None":
+        return self._resolve_spec(
+            parse_query(query_text, mode, analyzed=analyzed, min_match=min_match)
+        )
+
+    def _ranked(self, cand: DataFrame, k: int) -> DataFrame:
+        """Kernel candidates → labeled global top-k (TakeOrderedAndProject)."""
+        return (
+            self._label(cand)
+            .orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
+            .limit(k)
+        )
+
+    def topk(
+        self,
+        query_text: str,
+        mode: str = "disjunctive",
+        k: int = 10,
+        tombstones: list | None = None,
+        scope: DataFrame | None = None,
+        analyzed: bool = False,
+        min_match: int = 1,
+        search_after: tuple | None = None,
+        spec: "QuerySpec | None" = None,
+    ) -> DataFrame:
+        """Top-k → DataFrame(conv_id, turn_idx, score), oracle-identical.
+
+        ``tombstones`` (bare conv_id strings and/or (conv_id, turn_idx)
+        pairs) excludes deleted docs at candidate time; remaining scores
+        keep the as-built global stats until a compaction removes the
+        docs physically (see :class:`Tombstones`).
+
+        ``scope`` (a DataFrame with conv_id/turn_idx columns — typically
+        the corpus metadata filtered by a structured predicate: role,
+        tool, a ts range) restricts RESULTS to those turns.  Scores keep
+        the corpus-global stats — Lucene/Elasticsearch filter-context
+        semantics, where filters never affect ranking.
+
+        ``min_match`` (disjunctive) keeps only docs matching ≥ m
+        distinct query terms (ES minimum_should_match).  Term tokens
+        may carry ``^w`` boosts (``kubernetes^2 pod``) multiplying
+        their idf contribution (Lucene boost semantics).
+
+        ``search_after`` = (score, conv_id, turn_idx) of the previous
+        page's LAST row: returns the k results strictly after it in
+        (score desc, conv_id, turn_idx) rank order — offset-free deep
+        pagination.  Page N costs one candidate-scoring pass like page
+        1 (never an N·k overfetch), and each group ships ≤ k rows.
+        The cursor score must be the EXACT float the engine returned
+        (the ES search_after contract: exact sort values) — a
+        display-rounded score can land on the wrong side of the strict
+        comparison and duplicate or drop a boundary row."""
+        if spec is None:
+            spec = self._parse(query_text, mode, analyzed, min_match)
+        if spec is None:
+            return self.spark.createDataFrame([], LABELED_SCHEMA)
+        idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
+        fn = _make_group_kernel(
+            spec, idf, self.avgdl, k, with_ties=self.tie_safe,
+            exclude=self._exclude(tombstones), turn_bits=self.turn_bits,
+            after=self._resolve_after(search_after),
+        )
+        post = self._postings(_fetch_terms(spec))
+        return self._ranked(self._grouped(post, scope, fn, RESULT_SCHEMA), k)
+
+    def match_count(
+        self,
+        query_text: str,
+        mode: str = "disjunctive",
+        tombstones: list | None = None,
+        scope: DataFrame | None = None,
+        analyzed: bool = False,
+        min_match: int = 1,
+        spec: "QuerySpec | None" = None,
+    ) -> int:
+        """Total matching documents (the reference's totalResults field,
+        served by every /api/search response for pagination): size of
+        the candidate set :meth:`topk` ranks, via one grouped count pass
+        over the same bucket-pruned postings scan — groups (and
+        segments) hold disjoint documents, so the counts sum."""
+        if spec is None:
+            spec = self._parse(query_text, mode, analyzed, min_match)
+        if spec is None:
+            return 0
+        fn = _make_count_kernel(
+            spec, self.idf_map(spec.score_terms), self.avgdl,
+            exclude=self._exclude(tombstones), turn_bits=self.turn_bits,
+        )
+        post = self._postings(_fetch_terms(spec))
+        row = self._grouped(post, scope, fn, "n long").agg(F.sum("n")).collect()[0]
+        return int(row[0] or 0)
+
+    def matches(
+        self,
+        query_text: str,
+        mode: str = "disjunctive",
+        tombstones: list | None = None,
+        scope: DataFrame | None = None,
+        analyzed: bool = False,
+        min_match: int = 1,
+        spec: "QuerySpec | None" = None,
+    ) -> DataFrame:
+        """ALL matching documents → DataFrame(conv_id, turn_idx) — the
+        candidate set :meth:`match_count` sizes, materialized for
+        faceting and metadata joins.  Output is O(matches)."""
+        if spec is None:
+            spec = self._parse(query_text, mode, analyzed, min_match)
+        if spec is None:
+            return self.spark.createDataFrame([], "conv_id string, turn_idx int")
+        fn = _make_matches_kernel(
+            spec, self.idf_map(spec.score_terms), self.avgdl,
+            exclude=self._exclude(tombstones), turn_bits=self.turn_bits,
+        )
+        cand = self._grouped(self._postings(_fetch_terms(spec)), scope, fn, MATCHES_SCHEMA)
+        return self._label(cand.withColumn("score", F.lit(0.0))).drop("score")
+
+    def matches_scored(
+        self,
+        query_text: str,
+        mode: str = "disjunctive",
+        tombstones: list | None = None,
+        scope: DataFrame | None = None,
+        analyzed: bool = False,
+        spec: "QuerySpec | None" = None,
+    ) -> DataFrame:
+        """ALL matching documents WITH exact BM25 scores → DataFrame
+        (conv_id, turn_idx, score) — :meth:`matches` plus the score
+        column: the exhaustive-scoring feed for rescoring operators
+        whose final order is not monotone in BM25 (recency decay —
+        ``operators/recency.py``).  Output is O(matches); kernel cost
+        is the same O(postings) class as :meth:`match_count`."""
+        if spec is None:
+            spec = self._parse(query_text, mode, analyzed)
+        if spec is None:
+            return self.spark.createDataFrame([], LABELED_SCHEMA)
+        fn = _make_scored_matches_kernel(
+            spec, _weighted_idf(self.idf_map(spec.score_terms), spec), self.avgdl,
+            exclude=self._exclude(tombstones), turn_bits=self.turn_bits,
+        )
+        post = self._postings(_fetch_terms(spec))
+        return self._label(self._grouped(post, scope, fn, RESULT_SCHEMA))
+
+    def facet_counts(
+        self,
+        query_text: str,
+        meta: DataFrame,
+        facet_col: str,
+        mode: str = "disjunctive",
+        tombstones: list | None = None,
+        scope: DataFrame | None = None,
+        analyzed: bool = False,
+        min_match: int = 1,
+        spec: "QuerySpec | None" = None,
+    ) -> DataFrame:
+        """Matching-doc counts grouped by a metadata column → DataFrame
+        (facet_col, n) — the search-facet panel (count per role, tool,
+        day, …) for one query.
+
+        ``meta`` carries (conv_id, turn_idx, facet_col); pass the corpus
+        with a derived column for computed facets (e.g. ``date_trunc``
+        of ts).  The join input is the MATCH set, not the corpus, so
+        Catalyst/AQE broadcasts it when small; the metadata scan is
+        column-pruned to the three needed columns."""
+        cand = self.matches(
+            query_text, mode, tombstones=tombstones, scope=scope,
+            analyzed=analyzed, min_match=min_match, spec=spec,
+        )
+        return _facet_join(cand, meta, facet_col)
+
+    def topk_batch(
+        self,
+        queries: list[tuple[str, str] | tuple[str, str, int]],
+        k: int = 10,
+        tombstones: list | None = None,
+        scope: DataFrame | None = None,
+        analyzed: bool = False,
+    ) -> DataFrame:
+        """Top-k for MANY queries in ONE job →
+        DataFrame(query_id, conv_id, turn_idx, score).
+
+        ``queries`` is a list of (query_text, mode[, k]); query_id is
+        the list position.  The reference serves one query per request
+        (QueryService.java) — on Spark the per-job fixed overhead makes
+        that the wrong unit, so the batch path prunes the postings scan
+        to the UNION of all queries' term buckets, decodes each group's
+        posting blocks once, scores every query against them in the same
+        grouped kernel pass, and takes per-query top-k via
+        :func:`_rank_per_query`.  Results are row-identical to calling
+        :meth:`topk` per query (pinned by tests).  ``scope`` applies one
+        shared metadata filter to every query of the batch."""
+        specs = [
+            (i, self._resolve_spec(sp), kk)
+            for i, sp, kk in _parse_batch(queries, k, analyzed=analyzed)
+        ]
+        if not specs:
+            return self.spark.createDataFrame(
+                [], "query_id int, conv_id string, turn_idx int, score double"
+            )
+        fetch_terms, score_terms = _batch_term_sets(specs)
+        merged_idf = self.idf_map(sorted(score_terms))
+        # per-query maps carry that query's boosts (plists stay built
+        # from the unscaled merged map — weighted specs score exact)
+        idfs = [
+            _weighted_idf({t: merged_idf[t] for t in s.score_terms}, s)
+            for _, s, _ in specs
+        ]
+        fn = _make_batch_kernel(
+            [s for _, s, _ in specs],
+            idfs,
+            merged_idf,
+            self.avgdl,
+            [kk for _, _, kk in specs],
+            with_ties=self.tie_safe,
+            exclude=self._exclude(tombstones),
+            turn_bits=self.turn_bits,
+        )
+        post = self._postings(sorted(fetch_terms))
+        cand = self._grouped(post, scope, fn, BATCH_RESULT_SCHEMA)
+        return _rank_per_query(self._label(cand, extra=("query_id",)), specs)
+
+
+class CompressedIndex(IndexReader):
     """Reader over an index directory produced by :class:`IndexBuilder`."""
 
     def __init__(self, spark: SparkSession, root: str):
@@ -560,7 +951,7 @@ class CompressedIndex:
         # EMPTY idf table, which schema inference cannot read.
         from .build import BLOCKS_SCHEMA
 
-        self._postings = spark.read.schema(BLOCKS_SCHEMA + ", bucket int").parquet(
+        self._blocks = spark.read.schema(BLOCKS_SCHEMA + ", bucket int").parquet(
             self.paths.postings
         )
         self._idf = spark.read.schema("term string, df long, idf double, bucket int").parquet(
@@ -634,29 +1025,20 @@ class CompressedIndex:
 
     def postings_df(self, terms: list[str]) -> DataFrame:
         buckets = self._buckets(terms)
-        return self._postings.filter(
+        return self._blocks.filter(
             F.col("bucket").isin(buckets) & F.col("term").isin(terms)
         )
 
-    def expand_prefixes(self, query_text: str, limit: int = PREFIX_CAP) -> str:
-        """Rewrite trailing-``*`` tokens into their matching index terms
-        (``kuber* pod`` → ``kubernetes kuberctl pod``) — the Lucene
-        multi-term-query contract: the wildcard matches the POST-STEM
-        index vocabulary (wildcard terms skip analysis), expansion is
-        capped at ``limit`` terms per prefix (highest df first, term asc
-        ties — the most selective rewrite), and unmatched prefixes drop
-        out.  The rewritten string feeds the ordinary query paths, so
-        expansion composes with scope/tombstones/batch for free.
+    _postings = postings_df
 
-        Physically one scan of the one-row-per-term idf table with the
-        ``StartsWith`` filters pushed to parquet (the term-hash bucket
-        layout cannot prune a prefix — the vocabulary table is the
-        right side to pay that scan on, postings stay bucket-pruned)."""
-        toks, prefixes = split_prefix_tokens(query_text)
-        if not prefixes:
-            return query_text
-        return rewrite_with_expansions(
-            toks, self._prefix_expansions(prefixes, limit)
+    def _grouped(self, post: DataFrame, scope: DataFrame | None, fn, schema: str) -> DataFrame:
+        """One kernel pass per doc group (v5: single-sided — doclens
+        ride inline in the blocks, so the only exchange carries the
+        bucket-pruned postings); scoped, cogrouped with the predicate's
+        doc ids on the same ``group`` key."""
+        allow = None if scope is None else self.scope_docs(scope)
+        return _grouped_apply(
+            post, allow, ("group",), lambda key, pdf, a: fn(pdf, a), schema
         )
 
     def _vocab_topdf(
@@ -684,49 +1066,6 @@ class CompressedIndex:
             p: [t for _df, t in sorted(hits, key=lambda x: (-x[0], x[1]))]
             for p, hits in by_key.items()
         }
-
-    def _prefix_expansions(
-        self, prefixes: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        return self._vocab_topdf(
-            [(p, F.col("term").startswith(p)) for p in prefixes], limit
-        )
-
-    def _wildcard_expansions(
-        self, patterns: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        """General wildcard (``*``/``?`` anywhere) expansion over the
-        post-stem vocabulary — Lucene WildcardQuery semantics.  The
-        longest literal prefix is pushed as an extra StartsWith (prunes
-        the scan unless the pattern leads with a wildcard, Lucene's own
-        cost cliff); the LIKE itself evaluates in codegen."""
-        items = []
-        for p in patterns:
-            cond = F.col("term").like(wildcard_to_like(p))
-            lit = wildcard_literal_prefix(p)
-            if lit:
-                cond = F.col("term").startswith(lit) & cond
-            items.append((p, cond))
-        return self._vocab_topdf(items, limit)
-
-    def _regexp_expansions(
-        self, patterns: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        """Regexp term (``/pattern/``) expansion — Lucene RegexpQuery
-        semantics: the pattern must match the WHOLE vocabulary term
-        (anchored).  Evaluated JVM-side via ``rlike``; patterns are
-        validated driver-side first so an invalid regex fails loud with
-        a Python error, not an opaque executor stack."""
-        import re as _re
-
-        for p in patterns:
-            try:
-                _re.compile(p)
-            except _re.error as e:
-                raise ValueError(f"invalid regexp term /{p}/: {e}") from e
-        return self._vocab_topdf(
-            [(p, F.col("term").rlike(f"^(?:{p})$")) for p in patterns], limit
-        )
 
     def _fuzzy_rows(self, terms: list[str]) -> dict[str, list[tuple[str, int]]]:
         """Delete-1 collision candidates per fuzzy query term →
@@ -769,59 +1108,6 @@ class CompressedIndex:
             out[t] = list(seen.items())
         return out
 
-    def expand_fuzzy(self, query_text: str, limit: int = FUZZY_CAP) -> str:
-        """Rewrite trailing-``~`` tokens into their edit-distance-≤1
-        vocabulary neighbors (``kubernets~`` → ``kubernetes ...``) —
-        Lucene fuzzy-query semantics with the SymSpell delete-1 scheme
-        for candidate generation (see ``index/fuzzy.py``): exact term
-        first, then df desc / term asc, capped at ``limit``; unmatched
-        terms drop out.  The rewrite feeds the ordinary analyzed paths,
-        composing with scope/tombstones/batch like prefix expansion."""
-        toks, terms = split_fuzzy_tokens(query_text)
-        if not terms:
-            return query_text
-        return rewrite_fuzzy(toks, self._fuzzy_expansions(terms, limit))
-
-    def _fuzzy_expansions(
-        self, terms: list[str], limit: int
-    ) -> dict[str, list[str]]:
-        cand = self._fuzzy_rows(terms)
-        expansions: dict[str, list[str]] = {}
-        for t in terms:
-            exp = rank_fuzzy_candidates(t, cand.get(t, []), limit)
-            if exp:
-                expansions[t] = exp
-        return expansions
-
-    def expand_query(
-        self,
-        query_text: str,
-        prefix_limit: int = PREFIX_CAP,
-        fuzzy_limit: int = FUZZY_CAP,
-    ) -> str | None:
-        """One-pass EXECUTABLE rewrite of a query containing ``*``/``?``
-        /``~``/``/…/`` markers, or None when it has none: marker tokens
-        splice in their vocabulary expansions (prefix, fuzzy, general
-        wildcard, regexp), plain tokens run through the analyzer
-        ONCE, and the result must execute with ``analyzed=True`` —
-        vocabulary terms are analysis fixed points only by accident
-        (Porter is not idempotent: ``university → univers → univ``), so
-        a second analysis pass would corrupt them."""
-        cls = classify_expansion_tokens(query_text)
-        prefixes = sorted({v for kk, v in cls if kk == "prefix"})
-        fuzzies = sorted({v for kk, v in cls if kk == "fuzzy"})
-        wilds = sorted({v for kk, v in cls if kk == "wildcard"})
-        rexps = sorted({v for kk, v in cls if kk == "regexp"})
-        if not prefixes and not fuzzies and not wilds and not rexps:
-            return None
-        return assemble_expanded(
-            cls,
-            self._prefix_expansions(prefixes, prefix_limit) if prefixes else {},
-            self._fuzzy_expansions(fuzzies, fuzzy_limit) if fuzzies else {},
-            self._wildcard_expansions(wilds, prefix_limit) if wilds else {},
-            self._regexp_expansions(rexps, prefix_limit) if rexps else {},
-        )
-
     def expand_synonyms(
         self, query_text: str, mapping: dict | None = None,
         analyzed: bool = False,
@@ -849,32 +1135,6 @@ class CompressedIndex:
 
     # -- query -------------------------------------------------------
 
-    def topk_cached(
-        self, query_text: str, mode: str = "disjunctive", k: int = 10, algo: str = "auto"
-    ) -> list:
-        """Collected top-k with an LRU result cache (see :func:`_lru_topk`)."""
-        return _lru_topk(self, query_text, mode, k, algo)
-
-    def _resolve_spec(self, spec: "QuerySpec | None") -> "QuerySpec | None":
-        """Resolve a phrase-prefix marker (ES ``match_phrase_prefix``:
-        ``"incid resp*"``) into its vocabulary variants — one idf-table
-        TakeOrdered like :meth:`expand_prefixes` — folding them into the
-        scoring set.  Kernels require the resolved form (they have no
-        vocabulary access)."""
-        if spec is None or spec.phrase_prefix is None:
-            return spec
-        import dataclasses
-
-        exp = self._prefix_expansions([spec.phrase_prefix], PREFIX_CAP).get(
-            spec.phrase_prefix, []
-        )
-        return dataclasses.replace(
-            spec,
-            phrase_prefix=None,
-            variants=exp,
-            score_terms=sorted(set((spec.phrase_a or []) + exp)),
-        )
-
     def _resolve_tomb(self, tombstones) -> "Tombstones | None":
         if not tombstones:
             return None
@@ -892,6 +1152,8 @@ class CompressedIndex:
             hit = resolve_tombstones(self._convs, tombstones)
             self._tomb_memo[key] = hit
         return hit
+
+    _exclude = _resolve_tomb
 
     def _resolve_after(self, search_after) -> tuple[float, int] | None:
         """(score, conv_id, turn_idx) cursor → (score, cursor_doc_id) in
@@ -959,93 +1221,6 @@ class CompressedIndex:
             "group", "doc_id"
         )
 
-    def topk(
-        self,
-        query_text: str,
-        mode: str = "disjunctive",
-        k: int = 10,
-        algo: str = "auto",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        min_match: int = 1,
-        search_after: tuple | None = None,
-        spec: "QuerySpec | None" = None,
-    ) -> DataFrame:
-        """Top-k → DataFrame(conv_id, turn_idx, score), oracle-identical.
-
-        ``tombstones`` (bare conv_id strings and/or (conv_id, turn_idx)
-        pairs) excludes deleted docs at candidate time; remaining scores
-        keep the as-built global stats until a compaction removes the
-        docs physically (see :class:`Tombstones`).
-
-        ``scope`` (a DataFrame with conv_id/turn_idx columns — typically
-        the corpus metadata filtered by a structured predicate: role,
-        tool, a ts range) restricts RESULTS to those turns.  Scores keep
-        the corpus-global stats — Lucene/Elasticsearch filter-context
-        semantics, where filters never affect ranking.
-
-        ``min_match`` (disjunctive) keeps only docs matching ≥ m
-        distinct query terms (ES minimum_should_match).  Term tokens
-        may carry ``^w`` boosts (``kubernetes^2 pod``) multiplying
-        their idf contribution (Lucene boost semantics).
-
-        ``search_after`` = (score, conv_id, turn_idx) of the previous
-        page's LAST row: returns the k results strictly after it in
-        (score desc, conv_id, turn_idx) rank order — offset-free deep
-        pagination.  Page N costs one candidate-scoring pass like page
-        1 (never an N·k overfetch), and each group ships ≤ k rows.
-        The cursor score must be the EXACT float the engine returned
-        (the ES search_after contract: exact sort values) — a
-        display-rounded score can land on the wrong side of the strict
-        comparison and duplicate or drop a boundary row."""
-        if (tombstones or scope is not None or search_after is not None
-                or min_match > 1) and algo == "wand":
-            raise ValueError(
-                "algo='wand' cannot honor tombstones/scope/min_match/"
-                "search_after (its bounded heap has no candidate-exclusion "
-                "hook); use algo='auto' or 'exact'"
-            )
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame([], "conv_id string, turn_idx int, score double")
-        if spec is None:
-            return empty
-        fetch_terms = _fetch_terms(spec)
-        idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
-        avgdl = self.avgdl
-        # dense (streaming/arrival-ordered) doc ids are not isomorphic to
-        # the (conv_id, turn_idx) tie-break order, so group kernels must
-        # emit boundary ties and let the global sort resolve them; WAND's
-        # bounded heap cannot hold ties, so it is only safe on conv_rank
-        kernel = _make_group_kernel(
-            spec, idf, avgdl, k, algo, with_ties=self.tie_safe,
-            exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
-            after=self._resolve_after(search_after),
-        )
-        post = self.postings_df(fetch_terms)
-        # v5: single-sided grouped kernel — the only exchange carries the
-        # bucket-pruned postings; doclens are inline in the blocks (the
-        # pre-v5 shape cogrouped the CORPUS-wIDE doclen blobs per query)
-        if scope is not None:
-            # scoped: cogroup the pruned postings with the predicate's
-            # doc ids on the SAME group key — the allow side shuffles
-            # once, partitioned like the postings, never via the driver
-            cand = (
-                post.groupBy("group")
-                .cogroup(self.scope_docs(scope).groupBy("group"))
-                .applyInPandas(kernel, schema=RESULT_SCHEMA)
-            )
-        else:
-            cand = post.groupBy("group").applyInPandas(kernel, schema=RESULT_SCHEMA)
-        return (
-            self._label(cand)
-            .orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
-            .limit(k)
-        )
-
     def topk_conversations(
         self,
         query_text: str,
@@ -1077,147 +1252,17 @@ class CompressedIndex:
                 "compact first)"
             )
         if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
+            spec = self._parse(query_text, mode, analyzed, min_match)
         if spec is None:
-            return empty
-        fetch_terms = _fetch_terms(spec)
+            return self.spark.createDataFrame([], LABELED_SCHEMA)
         idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
-        kernel = _make_collapse_kernel(
+        fn = _make_collapse_kernel(
             spec, idf, self.avgdl, k, with_ties=self.tie_safe,
-            exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
+            exclude=self._exclude(tombstones), turn_bits=self.turn_bits,
             after=self._resolve_after(search_after),
         )
-        post = self.postings_df(fetch_terms)
-        if scope is not None:
-            cand = (
-                post.groupBy("group")
-                .cogroup(self.scope_docs(scope).groupBy("group"))
-                .applyInPandas(kernel, schema=RESULT_SCHEMA)
-            )
-        else:
-            cand = post.groupBy("group").applyInPandas(kernel, schema=RESULT_SCHEMA)
-        return (
-            self._label(cand)
-            .orderBy(F.desc("score"), F.asc("conv_id"), F.asc("turn_idx"))
-            .limit(k)
-        )
-
-    def match_count(
-        self,
-        query_text: str,
-        mode: str = "disjunctive",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        min_match: int = 1,
-        spec: "QuerySpec | None" = None,
-    ) -> int:
-        """Total matching documents (the reference's totalResults field,
-        served by every /api/search response for pagination): size of
-        the candidate set :meth:`topk` ranks, via one grouped count pass
-        over the same bucket-pruned postings scan."""
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        if spec is None:
-            return 0
-        fetch_terms = _fetch_terms(spec)
-        idf = self.idf_map(spec.score_terms)
-        kernel = _make_count_kernel(
-            spec, idf, self.avgdl, exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
-        )
-        post = self.postings_df(fetch_terms)
-        if scope is not None:
-            grouped = post.groupBy("group").cogroup(
-                self.scope_docs(scope).groupBy("group")
-            )
-        else:
-            grouped = post.groupBy("group")
-        row = (
-            grouped.applyInPandas(kernel, schema="n long")
-            .agg(F.sum("n"))
-            .collect()[0]
-        )
-        return int(row[0] or 0)
-
-    def matches(
-        self,
-        query_text: str,
-        mode: str = "disjunctive",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        min_match: int = 1,
-        spec: "QuerySpec | None" = None,
-    ) -> DataFrame:
-        """ALL matching documents → DataFrame(conv_id, turn_idx) — the
-        candidate set :meth:`match_count` sizes, materialized for
-        faceting and metadata joins.  Output is O(matches)."""
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
-        empty = self.spark.createDataFrame([], "conv_id string, turn_idx int")
-        if spec is None:
-            return empty
-        fetch_terms = _fetch_terms(spec)
-        idf = self.idf_map(spec.score_terms)
-        kernel = _make_matches_kernel(
-            spec, idf, self.avgdl, exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
-        )
-        post = self.postings_df(fetch_terms)
-        if scope is not None:
-            grouped = post.groupBy("group").cogroup(
-                self.scope_docs(scope).groupBy("group")
-            )
-        else:
-            grouped = post.groupBy("group")
-        cand = grouped.applyInPandas(kernel, schema=MATCHES_SCHEMA)
-        return self._label(cand.withColumn("score", F.lit(0.0))).drop("score")
-
-    def matches_scored(
-        self,
-        query_text: str,
-        mode: str = "disjunctive",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        spec: "QuerySpec | None" = None,
-    ) -> DataFrame:
-        """ALL matching documents WITH exact BM25 scores → DataFrame
-        (conv_id, turn_idx, score) — :meth:`matches` plus the score
-        column: the exhaustive-scoring feed for rescoring operators
-        whose final order is not monotone in BM25 (recency decay —
-        ``operators/recency.py``).  Output is O(matches); kernel cost
-        is the same O(postings) class as :meth:`match_count`."""
-        if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed))
-        empty = self.spark.createDataFrame(
-            [], "conv_id string, turn_idx int, score double"
-        )
-        if spec is None:
-            return empty
-        fetch_terms = _fetch_terms(spec)
-        idf = _weighted_idf(self.idf_map(spec.score_terms), spec)
-        kernel = _make_scored_matches_kernel(
-            spec, idf, self.avgdl, exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
-        )
-        post = self.postings_df(fetch_terms)
-        if scope is not None:
-            grouped = post.groupBy("group").cogroup(
-                self.scope_docs(scope).groupBy("group")
-            )
-        else:
-            grouped = post.groupBy("group")
-        return self._label(grouped.applyInPandas(kernel, schema=RESULT_SCHEMA))
+        post = self._postings(_fetch_terms(spec))
+        return self._ranked(self._grouped(post, scope, fn, RESULT_SCHEMA), k)
 
     def _doc_coords(self, conv_id: str, turn_idx: int) -> tuple[int, int] | None:
         """(group, doc_id) of one (conv_id, turn_idx), or None when the
@@ -1257,9 +1302,7 @@ class CompressedIndex:
         1/num_groups of a query's kernel work).  Empty when the doc does
         not match the query."""
         fetch_terms = _fetch_terms(spec)
-        kernel = _make_explain_kernel(
-            spec, idf, avgdl, doc_id, getattr(self, "turn_bits", TURN_BITS)
-        )
+        kernel = _make_explain_kernel(spec, idf, avgdl, doc_id, self.turn_bits)
         post = self.postings_df(fetch_terms).filter(F.col("group") == group)
         return post.groupBy("group").applyInPandas(
             kernel, schema=EXPLAIN_KERNEL_SCHEMA
@@ -1296,7 +1339,7 @@ class CompressedIndex:
         ``_candidates_spec`` dispatch over ONE group's pruned postings,
         so the kernel work is 1/num_groups of a full query's."""
         if spec is None:
-            spec = self._resolve_spec(parse_query(query_text, mode, analyzed=analyzed, min_match=min_match))
+            spec = self._parse(query_text, mode, analyzed, min_match)
         empty = self.spark.createDataFrame([], EXPLAIN_SCHEMA)
         if spec is None:
             return empty
@@ -1316,100 +1359,6 @@ class CompressedIndex:
             self.df_map(spec.score_terms), spec, self.avgdl,
         )
 
-    def facet_counts(
-        self,
-        query_text: str,
-        meta: DataFrame,
-        facet_col: str,
-        mode: str = "disjunctive",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-        min_match: int = 1,
-        spec: "QuerySpec | None" = None,
-    ) -> DataFrame:
-        """Matching-doc counts grouped by a metadata column → DataFrame
-        (facet_col, n) — the search-facet panel (count per role, tool,
-        day, …) for one query.
-
-        ``meta`` carries (conv_id, turn_idx, facet_col); pass the corpus
-        with a derived column for computed facets (e.g. ``date_trunc``
-        of ts).  The join input is the MATCH set, not the corpus, so
-        Catalyst/AQE broadcasts it when small; the metadata scan is
-        column-pruned to the three needed columns."""
-        cand = self.matches(
-            query_text, mode, tombstones=tombstones, scope=scope,
-            analyzed=analyzed, min_match=min_match, spec=spec,
-        )
-        return _facet_join(cand, meta, facet_col)
-
-    def topk_batch(
-        self,
-        queries: list[tuple[str, str] | tuple[str, str, int]],
-        k: int = 10,
-        algo: str = "auto",
-        tombstones: list | None = None,
-        scope: DataFrame | None = None,
-        analyzed: bool = False,
-    ) -> DataFrame:
-        """Top-k for MANY queries in ONE job →
-        DataFrame(query_id, conv_id, turn_idx, score).
-
-        ``queries`` is a list of (query_text, mode[, k]); query_id is
-        the list position.  The reference serves one query per request
-        (QueryService.java) — on Spark the per-job fixed overhead makes
-        that the wrong unit, so the batch path prunes the postings scan
-        to the UNION of all queries' term buckets, decodes each group's
-        posting blocks once, scores every query against them in the same
-        cogroup kernel pass, and takes per-query top-k via
-        :func:`_rank_per_query`.  Results are row-identical to calling
-        :meth:`topk` per query (pinned by tests).  ``scope`` applies one
-        shared metadata filter to every query of the batch."""
-        if (tombstones or scope is not None) and algo == "wand":
-            raise ValueError(
-                "algo='wand' cannot honor tombstones/scope (its bounded heap "
-                "has no candidate-exclusion hook); use algo='auto' or 'exact'"
-            )
-        specs = [
-            (i, self._resolve_spec(sp), kk)
-            for i, sp, kk in _parse_batch(queries, k, analyzed=analyzed)
-        ]
-        empty = self.spark.createDataFrame(
-            [], "query_id int, conv_id string, turn_idx int, score double"
-        )
-        if not specs:
-            return empty
-        fetch_terms, score_terms = _batch_term_sets(specs)
-        merged_idf = self.idf_map(sorted(score_terms))
-        # per-query maps carry that query's boosts (plists stay built
-        # from the unscaled merged map — weighted specs score exact)
-        idfs = [
-            _weighted_idf({t: merged_idf[t] for t in s.score_terms}, s)
-            for _, s, _ in specs
-        ]
-        kernel = _make_batch_kernel(
-            [s for _, s, _ in specs],
-            idfs,
-            merged_idf,
-            self.avgdl,
-            [kk for _, _, kk in specs],
-            algo,
-            with_ties=self.tie_safe,
-            exclude=self._resolve_tomb(tombstones),
-            turn_bits=getattr(self, "turn_bits", TURN_BITS),
-            scoped=scope is not None,
-        )
-        post = self.postings_df(sorted(fetch_terms))
-        if scope is not None:
-            cand = (
-                post.groupBy("group")
-                .cogroup(self.scope_docs(scope).groupBy("group"))
-                .applyInPandas(kernel, schema=BATCH_RESULT_SCHEMA)
-            )
-        else:
-            cand = post.groupBy("group").applyInPandas(kernel, schema=BATCH_RESULT_SCHEMA)
-        return _rank_per_query(self._label(cand, extra=("query_id",)), specs)
-
 
 def _score_spec(
     spec: QuerySpec,
@@ -1417,7 +1366,6 @@ def _score_spec(
     plists: dict,
     avgdl: float,
     k: int,
-    algo: str,
     with_ties: bool,
     tomb: "Tombstones | None" = None,
     turn_bits: int = TURN_BITS,
@@ -1437,73 +1385,19 @@ def _score_spec(
     AFTER the cursor (search_after deep pagination — see
     :func:`_topk_after`)."""
     score_lists = {t: p for t, p in plists.items() if t in idf}
-    if spec.mode == "disjunctive":
-        if (
-            tomb is not None
-            or allow is not None
-            or after is not None
-            or spec.min_match > 1
-        ):
-            # tombstoned/scoped/min_match/search_after disjunctive
-            # queries run candidates+exact (topk() rejects an explicit
-            # algo='wand' with these up front): exclusion happens on the
-            # materialized candidate set, before the top-k cut
-            if spec.min_match > 1:
-                cand = msm_candidates(score_lists, spec.min_match)
-            else:
-                arrs = [p.doc_ids for p in score_lists.values()]
-                if not arrs:
-                    return (
-                        np.empty(0, dtype=np.int64),
-                        np.empty(0, dtype=np.float64),
-                    )
-                cand = np.unique(np.concatenate(arrs))
-            if allow is not None:
-                cand = np.intersect1d(cand, allow, assume_unique=True)
-            if tomb is not None:
-                cand = tomb.mask(cand, turn_bits)
-            if after is not None:
-                return _topk_after(
-                    score_lists, idf, avgdl, k, cand, after, with_ties
-                )
-            return exact_topk(
-                score_lists, idf, avgdl, k, candidates=cand, with_ties=with_ties
-            )
-        # `auto` = vectorized block-max pruning (kernels.blockmax_topk):
-        # numpy block-at-a-time skipping with the exact kernel's float
-        # semantics — lossless (blockmax==exact==wand pinned by tests).
-        # The pure-Python doc-at-a-time WAND loop measured 1.7-2.6x
-        # SLOWER than exact (BASELINE.md "WAND vs vectorized exact"), so
-        # it stays an explicit algo only.
-        if not with_ties and algo == "wand":
-            return wand_topk(score_lists, idf, avgdl, k)
-        if algo == "exact":
-            return exact_topk(score_lists, idf, avgdl, k, with_ties=with_ties)
-        return blockmax_topk(score_lists, idf, avgdl, k, with_ties=with_ties)
-    if spec.mode == "conjunctive":
-        need = {t: plists[t] for t in spec.score_terms if t in plists}
-        if len(need) < len(spec.score_terms):
-            return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-        cand = conjunctive_candidates(need)
-    elif spec.mode == "phrase":
-        cand = _phrase_cand(spec, plists)
-    elif spec.mode == "near":
-        cand = near_candidates(spec.score_terms, plists, spec.slop)
-    elif spec.mode == "bool":
-        cand = bool_candidates(plists, spec.bool_clauses)
-    else:  # boolean
-        la = phrase_candidates(spec.phrase_a or [], plists)
-        rb = phrase_candidates(spec.phrase_b or [], plists)
-        if spec.bool_op == "AND":
-            cand = np.intersect1d(la, rb, assume_unique=True)
-        elif spec.bool_op == "OR":
-            cand = np.union1d(la, rb)
-        else:
-            cand = np.setdiff1d(la, rb, assume_unique=True)
-    if allow is not None:
-        cand = np.intersect1d(cand, allow, assume_unique=True)
-    if tomb is not None:
-        cand = tomb.mask(cand, turn_bits)
+    if (spec.mode == "disjunctive" and spec.min_match == 1
+            and tomb is None and allow is None and after is None):
+        # unrestricted disjunction: vectorized block-max pruning
+        # (kernels.blockmax_topk), lossless — blockmax == exact pinned
+        # by tests — while each list's block bounds were built from the
+        # idf it is scored with.  A batch shares lists built from the
+        # unscaled idf, so a boosted query there scores every candidate.
+        if all(p.idf == idf[t] for t, p in score_lists.items()):
+            return blockmax_topk(score_lists, idf, avgdl, k, with_ties=with_ties)
+        return exact_topk(score_lists, idf, avgdl, k, with_ties=with_ties)
+    # every other shape materializes its candidate set, so exclusion
+    # happens before the top-k cut
+    cand = _candidates_spec(spec, idf, plists, tomb, turn_bits, allow)
     if after is not None:
         return _topk_after(score_lists, idf, avgdl, k, cand, after, with_ties)
     return exact_topk(
@@ -1579,13 +1473,12 @@ def _make_count_kernel(
     avgdl: float,
     exclude=None,
     turn_bits: int = TURN_BITS,
-    scoped: bool = False,
 ):
     def count(post_pdf: pd.DataFrame, allow: np.ndarray | None) -> pd.DataFrame:
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
             return pd.DataFrame({"n": pd.array([0], dtype="int64")})
         plists = _build_plists(post_pdf, idf, avgdl)
-        tomb = _tomb_for(exclude, post_pdf)
+        tomb = _per_seg(exclude, post_pdf)
         return pd.DataFrame(
             {"n": pd.array(
                 [_count_spec(spec, idf, plists, tomb, turn_bits, allow)],
@@ -1593,14 +1486,7 @@ def _make_count_kernel(
             )}
         )
 
-    if scoped:
-        def kernel(key: tuple, post_pdf: pd.DataFrame, allow_pdf: pd.DataFrame):
-            return count(post_pdf, _allow_arr(allow_pdf))
-    else:
-        def kernel(key: tuple, post_pdf: pd.DataFrame) -> pd.DataFrame:
-            return count(post_pdf, None)
-
-    return kernel
+    return count
 
 
 MATCHES_SCHEMA = "doc_id long"
@@ -1612,7 +1498,6 @@ def _make_matches_kernel(
     avgdl: float,
     exclude=None,
     turn_bits: int = TURN_BITS,
-    scoped: bool = False,
 ):
     """Kernel EMITTING the matching doc ids of each group (the set
     :func:`_count_spec` sizes) — the distributed input to faceting and
@@ -1623,18 +1508,11 @@ def _make_matches_kernel(
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
             return pd.DataFrame({"doc_id": pd.array([], dtype="int64")})
         plists = _build_plists(post_pdf, idf, avgdl)
-        tomb = _tomb_for(exclude, post_pdf)
+        tomb = _per_seg(exclude, post_pdf)
         cand = _candidates_spec(spec, idf, plists, tomb, turn_bits, allow)
         return pd.DataFrame({"doc_id": cand})
 
-    if scoped:
-        def kernel(key: tuple, post_pdf: pd.DataFrame, allow_pdf: pd.DataFrame):
-            return emit(post_pdf, _allow_arr(allow_pdf))
-    else:
-        def kernel(key: tuple, post_pdf: pd.DataFrame) -> pd.DataFrame:
-            return emit(post_pdf, None)
-
-    return kernel
+    return emit
 
 
 EXPLAIN_KERNEL_SCHEMA = "term string, tf long, dl long"
@@ -1731,48 +1609,50 @@ def _assemble_explain(
     return spark.createDataFrame(out, EXPLAIN_SCHEMA)
 
 
+def _scored_candidates(
+    spec: QuerySpec,
+    idf: dict[str, float],
+    plists: dict,
+    avgdl: float,
+    tomb: "Tombstones | None",
+    turn_bits: int,
+    allow: np.ndarray | None,
+) -> tuple[np.ndarray, np.ndarray]:
+    """EVERY matching doc of one group with its exact BM25 score, in
+    (score desc, doc asc) order — no top-k cut, no block pruning.  Every
+    candidate contains ≥1 scoring term, so scores are strictly positive
+    and the exact kernel's zero-score drop never fires."""
+    cand = _candidates_spec(spec, idf, plists, tomb, turn_bits, allow)
+    score_lists = {t: p for t, p in plists.items() if t in idf}
+    return exact_topk(score_lists, idf, avgdl, int(cand.size), candidates=cand)
+
+
 def _make_scored_matches_kernel(
     spec: QuerySpec,
     idf: dict[str, float],
     avgdl: float,
     exclude=None,
     turn_bits: int = TURN_BITS,
-    scoped: bool = False,
 ):
     """Kernel emitting EVERY matching doc WITH its exact BM25 score —
     the exhaustive-scoring input to rescoring operators whose final
     order is NOT monotone in the BM25 score (recency decay: a fresher
     low-BM25 doc can outrank a stale high-BM25 one, so a top-N overfetch
-    would be lossy).  Same candidate set as :func:`_make_matches_kernel`
-    (every candidate contains ≥1 scoring term, so scores are strictly
-    positive and the exact kernel's zero-score drop never fires); cost
-    is one full decode+score of the query terms' postings — the same
-    O(postings) class as :func:`_make_count_kernel`."""
+    would be lossy).  Same candidate set as :func:`_make_matches_kernel`;
+    cost is one full decode+score of the query terms' postings — the
+    same O(postings) class as :func:`_make_count_kernel`."""
 
     def emit(post_pdf: pd.DataFrame, allow: np.ndarray | None) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
-                              "score": pd.array([], dtype="float64")})
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
-            return empty
+            return pd.DataFrame({"doc_id": pd.array([], dtype="int64"),
+                                 "score": pd.array([], dtype="float64")})
         plists = _build_plists(post_pdf, idf, avgdl)
-        tomb = _tomb_for(exclude, post_pdf)
-        cand = _candidates_spec(spec, idf, plists, tomb, turn_bits, allow)
-        if cand.size == 0:
-            return empty
-        score_lists = {t: p for t, p in plists.items() if t in idf}
-        docs, scores = exact_topk(
-            score_lists, idf, avgdl, int(cand.size), candidates=cand
+        docs, scores = _scored_candidates(
+            spec, idf, plists, avgdl, _per_seg(exclude, post_pdf), turn_bits, allow
         )
         return pd.DataFrame({"doc_id": docs, "score": scores})
 
-    if scoped:
-        def kernel(key: tuple, post_pdf: pd.DataFrame, allow_pdf: pd.DataFrame):
-            return emit(post_pdf, _allow_arr(allow_pdf))
-    else:
-        def kernel(key: tuple, post_pdf: pd.DataFrame) -> pd.DataFrame:
-            return emit(post_pdf, None)
-
-    return kernel
+    return emit
 
 
 def _build_plists(post_pdf: pd.DataFrame, idf: dict[str, float], avgdl: float) -> dict:
@@ -1796,20 +1676,16 @@ def _make_group_kernel(
     idf: dict[str, float],
     avgdl: float,
     k: int,
-    algo: str,
     with_ties: bool = False,
     exclude=None,
     turn_bits: int = TURN_BITS,
-    scoped: bool = False,
     after=None,
 ):
-    """Build the per-group grouped kernel for one parsed query.
-
-    ``scoped=True`` returns the COGROUP form ``(key, postings, allow)``
-    — the allow side is the scope predicate's matching doc ids of the
-    same group, delivered by Spark's cogroup (never a driver collect).
-    ``after`` is the resolved search_after cursor ((score, doc_id), or a
-    per-segment dict under MultiIndex)."""
+    """Per-group top-k kernel ``fn(post_pdf, allow)`` for one parsed
+    query.  ``allow`` is the scope predicate's doc ids of the group
+    (None without a scope), delivered by the reader's cogroup, never a
+    driver collect.  ``after`` is the resolved search_after cursor
+    ((score, doc_id), or a per-segment dict under MultiIndex)."""
 
     def score(post_pdf: pd.DataFrame, allow: np.ndarray | None) -> pd.DataFrame:
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
@@ -1817,20 +1693,13 @@ def _make_group_kernel(
                                  "score": pd.array([], dtype="float64")})
         plists = _build_plists(post_pdf, idf, avgdl)
         docs, scores = _score_spec(
-            spec, idf, plists, avgdl, k, algo, with_ties,
-            tomb=_tomb_for(exclude, post_pdf), turn_bits=turn_bits,
-            allow=allow, after=_after_for(after, post_pdf),
+            spec, idf, plists, avgdl, k, with_ties,
+            tomb=_per_seg(exclude, post_pdf), turn_bits=turn_bits,
+            allow=allow, after=_per_seg(after, post_pdf),
         )
         return pd.DataFrame({"doc_id": docs, "score": scores})
 
-    if scoped:
-        def kernel(key: tuple, post_pdf: pd.DataFrame, allow_pdf: pd.DataFrame):
-            return score(post_pdf, _allow_arr(allow_pdf))
-    else:
-        def kernel(key: tuple, post_pdf: pd.DataFrame) -> pd.DataFrame:
-            return score(post_pdf, None)
-
-    return kernel
+    return score
 
 
 BATCH_RESULT_SCHEMA = "query_id int, doc_id long, score double"
@@ -1842,19 +1711,16 @@ def _make_batch_kernel(
     merged_idf: dict[str, float],
     avgdl: float,
     ks: list[int],
-    algo: str,
     with_ties: bool = False,
     exclude=None,
     turn_bits: int = TURN_BITS,
-    scoped: bool = False,
 ):
     """One grouped kernel scoring EVERY query of a batch against the
     group's postings: term posting lists are decoded once per group and
     shared across queries (idf is a corpus property, identical for any
     query naming the term), so N queries cost one postings scan + one
-    decode instead of N jobs.  ``scoped=True`` applies ONE shared scope
-    to every query of the batch (cogroup form, like
-    :func:`_make_group_kernel`)."""
+    decode instead of N jobs.  A scope's ``allow`` set applies to every
+    query of the batch."""
 
     def score(post_pdf: pd.DataFrame, allow: np.ndarray | None) -> pd.DataFrame:
         empty = pd.DataFrame(
@@ -1867,16 +1733,11 @@ def _make_batch_kernel(
         if len(post_pdf) == 0 or (allow is not None and allow.size == 0):
             return empty
         plists = _build_plists(post_pdf, merged_idf, avgdl)
-        tomb = _tomb_for(exclude, post_pdf)
+        tomb = _per_seg(exclude, post_pdf)
         frames = []
         for qid, (spec, idf, k) in enumerate(zip(specs, idfs, ks)):
-            # a boosted query's per-query idf map is SCALED, but plists
-            # (shared across the batch) carry block bounds built from
-            # the unscaled merged map — bound-dependent algos would be
-            # lossy for boosts > 1, so weighted specs score exact
-            qalgo = "exact" if spec.weights else algo
             docs, scores = _score_spec(
-                spec, idf, plists, avgdl, k, qalgo, with_ties,
+                spec, idf, plists, avgdl, k, with_ties,
                 tomb=tomb, turn_bits=turn_bits, allow=allow,
             )
             if docs.size:
@@ -1891,11 +1752,4 @@ def _make_batch_kernel(
                 )
         return pd.concat(frames, ignore_index=True) if frames else empty
 
-    if scoped:
-        def kernel(key: tuple, post_pdf: pd.DataFrame, allow_pdf: pd.DataFrame):
-            return score(post_pdf, _allow_arr(allow_pdf))
-    else:
-        def kernel(key: tuple, post_pdf: pd.DataFrame) -> pd.DataFrame:
-            return score(post_pdf, None)
-
-    return kernel
+    return score

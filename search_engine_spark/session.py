@@ -4,7 +4,7 @@ Defaults target the sandbox (single JVM, local[N]); every setting is the
 one you would also want on a 1000-executor cluster:
 
 * AQE on (runtime re-planning, skew-join splitting, partition coalescing)
-* Arrow enabled for pandas UDFs (the tokenizer and WAND kernels are
+* Arrow enabled for pandas UDFs (the tokenizer and top-k kernels are
   Arrow-batched; per-row Python never touches the hot path)
 * explicit shuffle partition count (sized by corpus, overridable)
 """

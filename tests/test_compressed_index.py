@@ -88,20 +88,6 @@ def test_rank_identity_vs_oracle(built, sm_oracle, q):
         assert row["score"] == pytest.approx(score, abs=1e-9)
 
 
-@pytest.mark.parametrize(
-    "qid", [0, 1, 5, 15, 17, 20], ids=lambda i: f"q{i}"
-)
-def test_wand_equals_exact(built, qid):
-    q = REFERENCE_QUERIES[qid]
-    exact = built.topk(q["query_text"], q["mode"], q["k"], algo="exact").collect()
-    wand = built.topk(q["query_text"], q["mode"], q["k"], algo="wand").collect()
-    assert [(r["conv_id"], r["turn_idx"]) for r in exact] == [
-        (r["conv_id"], r["turn_idx"]) for r in wand
-    ]
-    for a, b in zip(exact, wand):
-        assert a["score"] == pytest.approx(b["score"], abs=1e-12)
-
-
 def test_resume_produces_identical_index(spark, sm_parquet, tmp_path_factory, sm_oracle):
     """Kill-after-2-groups + resume ≡ uninterrupted build (§5.2 item 4)."""
     transcripts = spark.read.parquet(sm_parquet)

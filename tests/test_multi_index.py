@@ -8,6 +8,8 @@ back into one root (tested in test_incremental.py).
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 import pytest
 
@@ -64,12 +66,120 @@ def three_segments(spark, xs_pdf, tmp_path_factory):
     return roots
 
 
-def test_single_segment_matches_compressed_index(spark, xs_full_index):
-    multi = MultiIndex(spark, [xs_full_index.paths.root])
-    assert multi.n_docs == xs_full_index.n_docs
-    assert multi.avgdl == pytest.approx(xs_full_index.avgdl, rel=0, abs=0)
+def _collected(rows, ordered: bool = False) -> list[tuple]:
+    """Rounded row tuples of a DataFrame or an already-collected list."""
+    rows = [
+        tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+        for r in (rows if isinstance(rows, list) else rows.collect())
+    ]
+    return rows if ordered else sorted(rows)
+
+
+def _answers(ix, q: str, mode: str, scope) -> tuple:
+    return (
+        _collected(ix.topk(q, mode, 10, scope=scope), ordered=True),
+        ix.match_count(q, mode, scope=scope),
+        _collected(ix.matches(q, mode, scope=scope)),
+        _collected(ix.matches_scored(q, mode, scope=scope)),
+    )
+
+
+def test_single_segment_matches_compressed_index(spark, xs_pdf, xs_full_index):
+    """A one-segment MultiIndex answers every shared query plan exactly
+    like the CompressedIndex it wraps — unscoped and scoped — and its
+    vocabulary expansions honor the same limits, 0 included."""
+    from search_engine_spark.oracle import (
+        FUZZY_CAP,
+        PREFIX_CAP,
+        build_oracle_index,
+        oracle_expand_query,
+    )
+
+    single = xs_full_index
+    multi = MultiIndex(spark, [single.paths.root])
+    assert multi.n_docs == single.n_docs
+    assert multi.avgdl == pytest.approx(single.avgdl, rel=0, abs=0)
     for q in _PROBE_QUERIES:
-        assert _rows(multi, q) == _rows(xs_full_index, q), q["query_text"]
+        assert _rows(multi, q) == _rows(single, q), q["query_text"]
+
+    meta = spark.createDataFrame(xs_pdf[["conv_id", "turn_idx", "role"]])
+    queries = [
+        ("term0001^3 term0002", "disjunctive"),
+        ('"term0001 term00*"', "phrase"),  # phrase prefix: _resolve_spec
+    ]
+    for scope in (None, meta.filter("role = 'assistant'")):
+        for q, mode in queries:
+            got = _answers(multi, q, mode, scope)
+            assert got == _answers(single, q, mode, scope), (q, mode, scope)
+            assert got[1] > 0, (q, mode)
+        batch = [(q, mode, 5) for q, mode in queries]
+        assert _collected(multi.topk_batch(batch, scope=scope)) == _collected(
+            single.topk_batch(batch, scope=scope)
+        )
+        assert _collected(
+            multi.facet_counts("term0001 term0002", meta, "role", scope=scope)
+        ) == _collected(
+            single.facet_counts("term0001 term0002", meta, "role", scope=scope)
+        )
+    assert _collected(multi.topk_cached("term0001 term0002"), ordered=True) == (
+        _collected(single.topk_cached("term0001 term0002"), ordered=True)
+    )
+
+    oracle = build_oracle_index(xs_pdf)
+    marked = "term000* t?rm0001 /term00(1[0-9])/ term001~ alpha"
+    for limits in ((PREFIX_CAP, FUZZY_CAP), (0, FUZZY_CAP), (2, 0)):
+        want = oracle_expand_query(oracle, marked, *limits)
+        assert multi.expand_query(marked, *limits) == want, limits
+        assert single.expand_query(marked, *limits) == want, limits
+    for limit in (PREFIX_CAP, 0):
+        assert multi.expand_prefixes("term000* alpha", limit) == (
+            single.expand_prefixes("term000* alpha", limit)
+        )
+        assert multi.expand_fuzzy("term001~ alpha", limit) == (
+            single.expand_fuzzy("term001~ alpha", limit)
+        )
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _kernel_keys(plan: str) -> list[str]:
+    """Grouping keys of every grouped pandas kernel in a physical plan."""
+    return [
+        re.sub(r"#\d+", "", k)
+        for k in re.findall(r"FlatMap(?:Co)?GroupsInPandas \[([^\]]*)\]", plan)
+    ]
+
+
+def test_query_plan_shapes(spark, xs_pdf, xs_full_index):
+    """Pins the physical plans of the shared query path: a bucket-pruned
+    postings scan, exactly ONE grouped pandas kernel keyed on the doc
+    group alone — (seg, group) on a MultiIndex — and the global cut
+    (TakeOrderedAndProject for top-k, a per-query Window for a batch)."""
+    idx = xs_full_index
+    scope = spark.createDataFrame(xs_pdf[["conv_id", "turn_idx", "role"]]).filter(
+        "role = 'user'"
+    )
+    q = "term0001 term0002"
+    plans = {
+        "topk": _executed_plan(idx.topk(q, "disjunctive", 10)),
+        "scoped": _executed_plan(idx.topk(q, "disjunctive", 10, scope=scope)),
+        "batch": _executed_plan(
+            idx.topk_batch([(q, "disjunctive"), ("term0003", "conjunctive", 5)])
+        ),
+    }
+    for name, plan in plans.items():
+        assert re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN \(", plan), name
+        assert _kernel_keys(plan) == ["group"], name
+    assert "FlatMapCoGroupsInPandas" in plans["scoped"]
+    assert "TakeOrderedAndProject" in plans["topk"]
+    assert "TakeOrderedAndProject" in plans["scoped"]
+    assert "Window" in plans["batch"]
+    multi = MultiIndex(spark, [idx.paths.root])
+    plan = _executed_plan(multi.topk(q, "disjunctive", 10))
+    assert _kernel_keys(plan) == ["seg, group"]
+    assert "TakeOrderedAndProject" in plan
 
 
 def test_three_segments_match_full_rebuild(spark, xs_full_index, three_segments):

@@ -43,16 +43,6 @@ def test_rank_identity_with_small_blocks(small_block_index, sm_oracle, qid):
         assert row["score"] == pytest.approx(score, abs=1e-9)
 
 
-@pytest.mark.parametrize("qid", [0, 1, 15, 20], ids=lambda i: f"q{i}")
-def test_wand_equals_exact_with_small_blocks(small_block_index, qid):
-    q = REFERENCE_QUERIES[qid]
-    exact = small_block_index.topk(q["query_text"], q["mode"], q["k"], algo="exact").collect()
-    wand = small_block_index.topk(q["query_text"], q["mode"], q["k"], algo="wand").collect()
-    assert [(r["conv_id"], r["turn_idx"], r["score"]) for r in exact] == [
-        (r["conv_id"], r["turn_idx"], r["score"]) for r in wand
-    ]
-
-
 def test_positions_decode_across_blocks(small_block_index, sm_oracle):
     """Phrase positions must decode correctly when the position stream was
     byte-sliced at block boundaries."""

@@ -64,7 +64,7 @@ def test_rerank_with_proximity(built, sm_oracle):
 
 def test_result_cache(built):
     r1 = built.topk_cached("term0000", "disjunctive", 10)
-    assert ("term0000", "disjunctive", 10, "auto") in built._results
+    assert ("term0000", "disjunctive", 10) in built._results
     r2 = built.topk_cached("term0000", "disjunctive", 10)
     assert r1 is r2  # same object → served from cache
     assert len(r1) == 10

@@ -120,15 +120,6 @@ def test_weight_one_is_identity(xs_index):
     )
 
 
-def test_weighted_algo_parity(xs_index):
-    """Boosts pre-scale the idf map, so block-max bounds scale with the
-    scores — every algo must return identical rows (lossless)."""
-    q = "term0001^4 term0002 term0003^0.5"
-    want = _rows(xs_index.topk(q, "disjunctive", 10, algo="exact"))
-    assert _rows(xs_index.topk(q, "disjunctive", 10, algo="auto")) == want
-    assert _rows(xs_index.topk(q, "disjunctive", 10, algo="wand")) == want
-
-
 def test_weighted_analyzed_mode(xs_index, xs_oracle):
     """Post-analysis terms carry boosts too (expansion composition)."""
     q = "term0001^2 term0002"
@@ -339,18 +330,6 @@ def test_search_after_collapse_page_identity(xs_index):
         xs_index.topk_conversations(q, "disjunctive", 4, search_after=_cur(p2[-1]))
     )
     assert p1 + p2 + p3 == full
-
-
-def test_search_after_wand_guard(xs_index):
-    with pytest.raises(ValueError, match="wand"):
-        xs_index.topk(
-            "term0001 term0002", "disjunctive", 10, algo="wand",
-            search_after=(1.0, "conv-000001", 0),
-        )
-    with pytest.raises(ValueError, match="wand"):
-        xs_index.topk(
-            "term0001 term0002", "disjunctive", 10, algo="wand", min_match=2
-        )
 
 
 # ------------------------------------------------- MultiIndex parity

@@ -136,13 +136,6 @@ def test_scoped_with_tombstones(xs_index, xs_df, xs_pdf, xs_oracle):
         oracle_match_count(xs_oracle, q, mode, scope=scope)
 
 
-def test_wand_rejects_scope(xs_index, xs_df):
-    with pytest.raises(ValueError, match="wand"):
-        xs_index.topk("term0001", "disjunctive", 10, algo="wand", scope=xs_df)
-    with pytest.raises(ValueError, match="wand"):
-        xs_index.topk_batch([("term0001", "disjunctive")], algo="wand", scope=xs_df)
-
-
 # ------------------------------------------------------ counts / facets
 
 
@@ -234,8 +227,6 @@ def test_multi_scoped_matches_single(spark, segments, xs_index, xs_df):
     want = {r["role"]: r["n"] for r in
             xs_index.facet_counts("term0001 term0002", xs_df, "role").collect()}
     assert got == want
-    with pytest.raises(ValueError, match="wand"):
-        multi.topk("term0001", "disjunctive", 10, algo="wand", scope=scope_df)
 
 
 def test_multi_scoped_batch_equals_per_query(spark, segments, xs_df):

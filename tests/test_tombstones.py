@@ -166,17 +166,6 @@ def test_unknown_conversation_is_noop(spark, full_index):
     assert got == want
 
 
-def test_wand_with_tombstones_rejected(full_index):
-    """An explicit algo='wand' with tombstones must raise, not be
-    silently downgraded to the exact kernel (round-4 ADVICE)."""
-    with pytest.raises(ValueError, match="wand"):
-        full_index.topk("term0001 term0002", "disjunctive", 5,
-                        algo="wand", tombstones=DELETED)
-    with pytest.raises(ValueError, match="wand"):
-        full_index.topk_batch([("term0001", "disjunctive")],
-                              algo="wand", tombstones=DELETED)
-
-
 def test_tombstone_resolution_memoized(full_index):
     """The same deletion list (any item order) resolves with ONE collect
     job per reader instance — service.search calls topk + match_count
